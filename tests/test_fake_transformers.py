@@ -221,6 +221,41 @@ def test_aho_rule_extraction_matches_contains_join(spark):
     assert sql_out == aho_out and len(sql_out) == 3
 
 
+def test_aho_rule_extraction_matches_contains_join_in_repo_text(spark):
+    """The pin above on text the repo generates itself (synthetic
+    conversations and their rule set, plus the same tricky strings), so
+    the Aho-Corasick scan the pipeline uses is checked without the
+    reference fixture."""
+    from waka_spark import synth
+    from waka_spark.operators.assembly import assemble_documents
+    from waka_spark.operators.relations import (
+        aho_relation_extraction,
+        rule_relation_extraction,
+    )
+
+    kb = synth.build_kb(20)
+    docs = assemble_documents(synth.synth_transcripts(
+        spark, kb, n_convs=6, hot_every=5, hot_turns=12, base_turns=5))
+    rules = synth.rules_df(spark, kb)
+
+    key = lambda r: (r.conv_id, r.subj_text, r.pred_text, r.obj_text)  # noqa: E731
+    sql_out = sorted(map(key, rule_relation_extraction(docs, rules).collect()))
+    aho_out = sorted(map(key, aho_relation_extraction(docs, rules).collect()))
+    assert sql_out == aho_out and sql_out
+
+    tricky = spark.createDataFrame(
+        [("t1", "aa aab ab b"), ("t2", "nothing"), ("t3", "ab aa ab aa ab")],
+        "conv_id string, text string",
+    )
+    tricky_rules = spark.createDataFrame(
+        [("aa", "p1", "ab"), ("aab", "p2", "b"), ("zz", "p3", "aa")],
+        "subj_surface string, pred_text string, obj_surface string",
+    )
+    sql_out = sorted(map(key, rule_relation_extraction(tricky, tricky_rules).collect()))
+    aho_out = sorted(map(key, aho_relation_extraction(tricky, tricky_rules).collect()))
+    assert sql_out == aho_out and len(sql_out) == 3
+
+
 def test_aho_cache_key_pipe_surfaces_do_not_collide(spark):
     """Two rule tables whose surface sets would collide under a
     '|'.join cache key ({'a|b','c'} vs {'a','b','c'} -> 'a|b|c') must

@@ -190,3 +190,27 @@ def test_fused_ner_identical_to_union_composition(spark):
     f_rows = sorted(map(tuple, fused.collect()))
     c_rows = sorted(map(tuple, composed.collect()))
     assert f_rows == c_rows and len(f_rows) > 20
+
+
+def test_fused_ner_identical_to_union_composition_in_repo_text(spark):
+    """The pin above on text the repo generates itself — synthetic
+    conversations plus the same tricky strings — so the fused scan every
+    pipeline run uses is checked without the reference fixture."""
+    from waka_spark import synth
+    from waka_spark.operators.assembly import assemble_documents
+    from waka_spark.operators.ner import deterministic_ner_fused
+
+    kb = synth.build_kb(20)
+    conversations = assemble_documents(synth.synth_transcripts(
+        spark, kb, n_convs=6, hot_every=5, hot_turns=12, base_turns=5))
+    docs = conversations.select("conv_id", "text").unionByName(_docs(spark, [
+        ("c2", "In 1919 it had 4000 students and 27% growth."),
+        ("c3", "Weimar and Weimarer and xWeimar in 1919."),
+        ("c4", ""),
+    ]))
+    gaz = synth.gazetteer(kb) + [("Weimar", "GPE"), ("1919", "ORG")]
+    fused = deterministic_ner_fused(docs, gaz)
+    composed = union_mentions(gazetteer_ner(docs, gaz), regex_literal_ner(docs))
+    f_rows = sorted(map(tuple, fused.collect()))
+    c_rows = sorted(map(tuple, composed.collect()))
+    assert f_rows == c_rows and len(f_rows) > 20

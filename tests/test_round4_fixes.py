@@ -51,10 +51,13 @@ class _StubPipeline:
     def raw_triples(self, docs):
         return self._fused
 
+    def scan_products(self, docs):
+        return self.mentions(docs), self.raw_triples(docs)
+
     def linked_triples(self, raw):
         return raw
 
-    def fused(self, linked, ents):
+    def fused(self, linked, ents, documents=None):
         return self._fused
 
 

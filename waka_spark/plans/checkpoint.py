@@ -33,6 +33,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waka_spark.plans.pipeline import run_stages
+
 
 @dataclass
 class CheckpointManager:
@@ -111,53 +113,6 @@ def run_checkpointed(
     manager: CheckpointManager,
     resolve: bool = True,
 ) -> dict[str, DataFrame]:
-    """The KG pipeline with a checkpoint barrier after each stage — the
-    spark-submit production shape (plans/pipeline.py is the lazy one-DAG
-    variant for interactive/bench use)."""
-    docs = manager.stage("documents", lambda: pipeline.documents(transcripts))
-    mentions = manager.stage("mentions", lambda: pipeline.mentions(docs))
-    cands = manager.stage("candidates", lambda: pipeline.candidates(docs, mentions))
-    ents = manager.stage("entities", lambda: pipeline.entities(cands))
-    raw = manager.stage("raw_triples", lambda: pipeline.raw_triples(docs))
-    linked = manager.stage("linked_triples", lambda: pipeline.linked_triples(raw))
-    fused = manager.stage("fused", lambda: pipeline.fused(linked, ents))
-
-    if resolve:
-        from waka_spark.operators.conflicts import apply_conflict_resolution
-
-        # Resolve ONCE and commit both outputs from the single pair (the
-        # reference's fusion likewise emits triples and entities from one
-        # pass, kg_construction.py:102-109). The pair shares the pinned
-        # per-conv fixpoint inside apply_conflict_resolution, so
-        # materializing "triples" runs the applyInPandas once and
-        # "final_entities" reuses the cache. Calling the resolver per
-        # stage (the round-3 shape) built two independent DAGs and
-        # executed the pipeline's most expensive stage twice per fresh
-        # run in the spark-submit path.
-        _pair: list[DataFrame] = []
-
-        def _resolved(idx: int) -> Callable[[], DataFrame]:
-            def thunk() -> DataFrame:
-                if not _pair:
-                    _pair.extend(apply_conflict_resolution(fused, ents))
-                return _pair[idx]
-
-            return thunk
-
-        triples = manager.stage("triples", _resolved(0))
-        final_entities = manager.stage("final_entities", _resolved(1))
-    else:
-        triples = fused
-        final_entities = ents
-
-    return {
-        "documents": docs,
-        "mentions": mentions,
-        "candidates": cands,
-        "entities": ents,
-        "raw_triples": raw,
-        "linked_triples": linked,
-        "fused": fused,
-        "triples": triples,
-        "final_entities": final_entities,
-    }
+    """The KG stage graph (plans/pipeline.run_stages) with every stage
+    committed by ``manager`` — the spark-submit production shape."""
+    return run_stages(pipeline, transcripts, manager.stage, resolve)

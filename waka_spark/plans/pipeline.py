@@ -2,16 +2,18 @@
 ``KGConstructor.construct``, kg_construction.py:232-282).
 
 The reference runs two OS-process pipelines per document and fuses in-process
-(SURVEY.md §3.1). Here the whole thing is one DataFrame DAG with two
-independent branches that Spark schedules concurrently:
+(SURVEY.md §3.1). Here the whole thing is one stage graph, declared once in
+:func:`run_stages`:
 
-    transcripts ──P1──► documents ──┬─► NER ─► link ─► rerank ─► cluster ─┐
-                                    └─► extract ─► link predicates ───────┤
-                                                                          ▼
-                                 fusion (P16-P22) ─► conflicts (P23-P24) ─►
-                                 nodes / edges (+ optional union-find pass)
+    transcripts ─P1─► documents ─► scan ─┬─► mentions ─► candidates ─► entities ─┐
+                                        └─► raw_triples ─► linked_triples ──────┤
+                                                                                ▼
+                      fused (P16-P22) ─► triples + final_entities (P23-P24)
 
-Everything below is lazy — one action at the end materializes the graph.
+Each stage is lazy; a *materializer* ``(name, compute) -> DataFrame`` cuts
+the lineage after it. ``KGPipeline.run`` materializes in memory (eager
+``localCheckpoint``); ``plans/checkpoint.run_checkpointed`` commits each
+stage to parquet and resumes mid-run.
 """
 
 from __future__ import annotations
@@ -23,17 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from waka_spark.config import DEFAULT, EngineConfig
+from waka_spark.operators import conflicts
 from waka_spark.operators.assembly import assemble_documents
 from waka_spark.operators.clustering import cluster_entities
-from waka_spark.operators.conflicts import apply_conflict_resolution
 from waka_spark.operators.fusion import fuse_triples
 from waka_spark.operators.linking import link_entities
-from waka_spark.operators.ner import (
-    deterministic_ner_fused,
-    gazetteer_ner,
-    regex_literal_ner,
-    union_mentions,
-)
+from waka_spark.operators.ner import deterministic_ner_fused
 from waka_spark.operators.rel_linking import link_predicates
 from waka_spark.operators.relations import (
     aho_relation_extraction,
@@ -80,13 +77,6 @@ class KGPipeline:
         # ensembles (transformer backends) override this method with
         # union_mentions(...); priority order = arg order (P6).
         return deterministic_ner_fused(documents, self.gazetteer)
-
-    def mentions_unfused(self, documents: DataFrame) -> DataFrame:
-        # the generic composition the fused pass is pinned against
-        return union_mentions(
-            gazetteer_ner(documents, self.gazetteer),
-            regex_literal_ner(documents),
-        )
 
     def candidates(self, documents: DataFrame, mentions: DataFrame) -> DataFrame:
         cands = link_entities(
@@ -179,105 +169,123 @@ class KGPipeline:
         self, transcripts: DataFrame, resolve: bool = True,
         cut_lineage: bool | str = True,
     ) -> dict[str, DataFrame]:
-        """transcripts → {documents, mentions, candidates, entities,
-        raw_triples, triples, final_entities, entity_mentions}.
+        """The stage graph (:func:`run_stages`) in memory: every stage is
+        cut by an eager ``localCheckpoint``. Shallow per-stage plans
+        (Catalyst re-analyzes the whole logical plan at every action) and no
+        recompute for multi-consumer stages. ``plans/checkpoint.py`` runs the
+        same graph with parquet stages that survive executor loss and
+        resume mid-run — use that on a real cluster.
 
-        ``cut_lineage`` controls stage-boundary materialization:
-
-        - ``"checkpoint"`` / ``True`` — eager ``localCheckpoint`` per stage.
-          Shallow plans (Catalyst re-analyzes the whole logical plan at every
-          action; with ten chained stages planning alone is material) and no
-          recompute for multi-consumer stages — but every boundary is a hard
-          scheduling barrier, so stage latencies *add* and short stages
-          can't overlap. Best for interactive/debug runs.
-        - ``"smart"`` — eager ``localCheckpoint`` only at *multi-consumer*
-          boundaries (documents ×3, entities ×2, fused ×2+); single-consumer
-          stages (mentions, candidates, linked) stay fused into their
-          consumer's job. Roughly halves the number of actions/barriers —
-          the throughput mode used by bench/submit paths. (A pure
-          ``persist()`` mode was measured and rejected: lazy caches fill
-          only after the first materialization finishes, so concurrent plan
-          branches race and recompute whole stages.)
-        - ``"none"`` / ``False`` — raw lineage (recompute per consumer).
-
-        The production checkpointed runner (plans/checkpoint.py) gets the
-        same cut via per-stage parquet materialization, which additionally
-        survives executor loss — use that on a real cluster.
+        ``cut_lineage`` accepts only ``True``/``"checkpoint"`` (the one
+        materialization), kept for callers that name it explicitly.
         """
-        if cut_lineage is True:
-            mode = "checkpoint"
-        elif cut_lineage is False:
-            mode = "none"
-        else:
-            mode = cut_lineage
-        if mode not in ("checkpoint", "smart", "none"):
+        if cut_lineage is not True and cut_lineage != "checkpoint":
             raise ValueError(
-                f"cut_lineage must be one of 'checkpoint'/'smart'/'none' "
-                f"(or True/False), got {cut_lineage!r}"
+                f"cut_lineage must be True or 'checkpoint', "
+                f"got {cut_lineage!r}"
             )
-        ident = lambda df: df  # noqa: E731
-        lc = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-        if mode == "checkpoint":
-            cut = cut_shared = lc
-        elif mode == "smart":
-            cut, cut_shared = ident, lc
-        else:
-            cut = cut_shared = ident
-        # Fan-out point: every per-document UDF stage (NER, sentence split,
-        # extraction) is a narrow map over `docs`, so its partition count
-        # caps their parallelism. AQE coalesces the small assembly shuffle
-        # to a handful of ~64MB partitions — fine for scans, terrible for
-        # CPU-heavy Python stages. Pin to 2x cores (explicit repartition is
-        # exempt from AQE coalescing); hash on conv_id keeps per-conv rows
-        # (one row each) spread and deterministic.
-        sc = transcripts.sparkSession.sparkContext
-        n_doc_parts = max(2 * sc.defaultParallelism, 8)
-        docs = cut_shared(
-            self.documents(transcripts).repartition(n_doc_parts, "conv_id")
-        )
-        mentions_raw, raw_scan = self.scan_products(docs)
-        mentions = cut(mentions_raw)
-        cands = cut(self.candidates(docs, mentions))
-        ents = cut_shared(self.entities(cands))
+        return run_stages(self, transcripts, local_checkpoint, resolve)
 
-        raw = raw_scan
-        linked = cut(self.linked_triples(raw))
 
-        fused = cut_shared(self.fused(linked, ents, docs))
+def local_checkpoint(name: str, compute: Callable[[], DataFrame]) -> DataFrame:
+    """The in-memory materializer: an eager ``localCheckpoint`` per stage."""
+    return compute().localCheckpoint(eager=True)
 
-        if resolve:
-            triples, final_entities = apply_conflict_resolution(fused, ents)
-        else:
-            triples = fused
+
+def _memo_pair(make: Callable[[], tuple[DataFrame, DataFrame]]):
+    """Two thunks over one pair: the first thunk called runs ``make``, the
+    other reuses its result. A resumed run that needs one half builds the
+    pair once; one that needs neither never builds it."""
+    pair: list[DataFrame] = []
+
+    def half(i: int) -> Callable[[], DataFrame]:
+        def thunk() -> DataFrame:
+            if not pair:
+                pair.extend(make())
+            return pair[i]
+
+        return thunk
+
+    return half(0), half(1)
+
+
+def run_stages(
+    pipeline: KGPipeline,
+    transcripts: DataFrame,
+    materialize: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    resolve: bool = True,
+) -> dict[str, DataFrame]:
+    """The KG stage graph, written once: transcripts → {documents,
+    mentions, candidates, entities, raw_triples, linked_triples, fused,
+    triples, final_entities, entity_mentions}.
+
+    ``materialize(name, compute)`` returns each stage's output; it is
+    called for the nine stages in that order (``entity_mentions`` stays a
+    lazy view of ``final_entities``). Stage methods are looked up on
+    ``pipeline`` and ``apply_conflict_resolution`` on its module at call
+    time, so subclasses and instrumentation see every call.
+
+    - ``mentions`` and ``raw_triples`` are the two halves of ONE
+      ``scan_products`` call: the corpus text crosses into Python once.
+    - ``triples`` and ``final_entities`` are the two halves of ONE
+      ``apply_conflict_resolution`` call (the reference's fusion likewise
+      emits both from one pass, kg_construction.py:102-109): the pair
+      shares the pinned per-conv fixpoint, so committing ``triples`` runs
+      the applyInPandas once and ``final_entities`` reuses the cache.
+    - ``resolve=False`` keeps the fused triples as they are and the
+      entities those triples use.
+    """
+    m = materialize
+    docs = m("documents", lambda: pipeline.documents(transcripts))
+    scan_mentions, scan_raw = _memo_pair(lambda: pipeline.scan_products(docs))
+    mentions = m("mentions", scan_mentions)
+    cands = m("candidates", lambda: pipeline.candidates(docs, mentions))
+    ents = m("entities", lambda: pipeline.entities(cands))
+    raw = m("raw_triples", scan_raw)
+    linked = m("linked_triples", lambda: pipeline.linked_triples(raw))
+    fused = m("fused", lambda: pipeline.fused(linked, ents, docs))
+
+    if resolve:
+        resolve_triples, resolve_entities = _memo_pair(
+            lambda: conflicts.apply_conflict_resolution(fused, ents))
+    else:
+        def resolve_triples() -> DataFrame:
+            return fused
+
+        def resolve_entities() -> DataFrame:
             used = (
                 fused.select("conv_id", F.col("subj_url").alias("url"))
-                .unionByName(fused.select("conv_id", F.col("obj_url").alias("url")))
+                .unionByName(
+                    fused.select("conv_id", F.col("obj_url").alias("url")))
                 .distinct()
             )
-            final_entities = ents.join(used, on=["conv_id", "url"], how="left_semi")
+            return ents.join(used, on=["conv_id", "url"], how="left_semi")
 
-        entity_mentions = final_entities.select(
-            "conv_id", "url", F.explode("mentions").alias("m")
-        ).select(
-            "conv_id", "url",
-            F.col("m")["start_idx"].alias("start_idx"),
-            F.col("m")["end_idx"].alias("end_idx"),
-            F.col("m")["text"].alias("text"),
-            F.col("m")["score"].alias("score"),
-        )
+    triples = m("triples", resolve_triples)
+    final_entities = m("final_entities", resolve_entities)
 
-        return {
-            "documents": docs,
-            "mentions": mentions,
-            "candidates": cands,
-            "entities": ents,
-            "raw_triples": raw,
-            "linked_triples": linked,
-            "fused": fused,
-            "triples": triples,
-            "final_entities": final_entities,
-            "entity_mentions": entity_mentions,
-        }
+    entity_mentions = final_entities.select(
+        "conv_id", "url", F.explode("mentions").alias("m")
+    ).select(
+        "conv_id", "url",
+        F.col("m")["start_idx"].alias("start_idx"),
+        F.col("m")["end_idx"].alias("end_idx"),
+        F.col("m")["text"].alias("text"),
+        F.col("m")["score"].alias("score"),
+    )
+
+    return {
+        "documents": docs,
+        "mentions": mentions,
+        "candidates": cands,
+        "entities": ents,
+        "raw_triples": raw,
+        "linked_triples": linked,
+        "fused": fused,
+        "triples": triples,
+        "final_entities": final_entities,
+        "entity_mentions": entity_mentions,
+    }
 
 
 def bauhaus_pipeline(spark: SparkSession, **overrides) -> KGPipeline:

@@ -39,10 +39,9 @@ class KGService:
     The per-request frame is a single transcript row, so every stage runs
     a handful of tasks — but the response still collects TWO outputs
     (triples and final_entities) from a DAG whose stages have multiple
-    consumers, so ``cut_lineage="smart"`` (materialize at multi-consumer
-    boundaries) is load-bearing here too: with "none" the whole fusion DAG
-    re-executes once per consumer and a single request costs minutes, not
-    seconds.
+    consumers. ``KGPipeline.run`` cuts the lineage after every stage with
+    an eager ``localCheckpoint``, so each stage executes once per request
+    and the two collects only read its materialized outputs.
     """
 
     def __init__(self, spark: SparkSession, pipeline: KGPipeline):
@@ -74,13 +73,12 @@ class KGService:
         #    removes those driver-side entries, so the operators register
         #    their pins with this scope and the scope releases them —
         #    blocks AND CacheManager entries.
-        # 2. RDD-set snapshot: localCheckpoint blocks (cut_lineage) are
+        # 2. RDD-set snapshot: the per-stage localCheckpoint blocks are
         #    RDD-level pins with no DataFrame handle surviving the run;
         #    release exactly the ids this run added.
         persisted_before = self._persistent_rdd_ids()
         with pin_scope():
-            out = self.pipeline.run(
-                transcripts, resolve=True, cut_lineage="smart")
+            out = self.pipeline.run(transcripts, resolve=True)
             triples = [
                 {
                     "subject": {"url": r["subj_url"],
