@@ -1280,8 +1280,9 @@ def q_kg_nodes_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-round synchronous label-propagation communities
     (operators/graph.py) over the SimHash similarity graph — deterministic
-    (count desc → label asc tie-break), one join + agg + per-node argmax
-    per round, localCheckpoint cutting lineage between rounds."""
+    (count desc → label asc tie-break), one join + count agg + per-node
+    argmax as a min(struct(-cnt, label)) hash-agg per round,
+    localCheckpoint cutting lineage between rounds."""
     from waka_spark.operators.graph import label_propagation
 
     return label_propagation(_simhash_graph(spark, sf_dir), n_iter=5).select(
@@ -1505,7 +1506,8 @@ def q_kg_entity_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the argmax predicate (ties -> lexicographically first) — the
     attribute-enriched nodes materialization a KG serving layer reads.
     Single scan of the triples plan (endpoint explode), one hash-agg per
-    (node, pred), one per-node argmax window."""
+    (node, pred), one per-node argmax as a min(struct(-count, pred))
+    hash-agg."""
     t = _rule_triples(spark, sf_dir)
     ends = t.select(
         F.explode(

@@ -216,8 +216,10 @@ def test_iterative_ops_release_superseded_round_state(spark):
     cached state. plans/iterate.py is the mechanism."""
     from pyspark.sql import functions as F
 
+    from waka_spark.operators.ann import mmr_topk
     from waka_spark.operators.graph import (
-        bfs_distances, k_core, label_propagation, pagerank)
+        bfs_distances, hits, k_core, k_truss, label_propagation, pagerank,
+        personalized_pagerank)
     from waka_spark.plans.unionfind import connected_components
 
     def n_persistent():
@@ -229,15 +231,30 @@ def test_iterative_ops_release_superseded_round_state(spark):
         + [(f"n{i}", f"n{(i + 7) % 40}") for i in range(40)],
         "src string, dst string",
     )
+    seeds = spark.createDataFrame([("n0",)], "node string")
+    # a 5-clique hung on the ring: k_truss peels the ring edges in round
+    # 1 and keeps the clique, so its per-round triangle enumerations
+    # (internal checkpoints) must be released too
+    dense = edges.unionByName(spark.createDataFrame(
+        [(f"n{i}", f"n{j}") for i in range(5) for j in range(i + 1, 5)],
+        "src string, dst string"))
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5) + 1.0]) for i in range(12)],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
+        "q_id long, q_vec array<double>")
 
     for fn in (
         lambda: connected_components(edges),
         lambda: pagerank(edges, n_iter=5),
-        lambda: bfs_distances(
-            edges, spark.createDataFrame([("n0",)], "node string"),
-            n_iter=4),
+        lambda: personalized_pagerank(edges, seeds, n_iter=4),
+        lambda: hits(edges, n_iter=4),
+        lambda: bfs_distances(edges, seeds, n_iter=4),
         lambda: label_propagation(edges, n_iter=4),
         lambda: k_core(edges, k=2, n_iter=4),
+        lambda: k_truss(dense, k=4, n_iter=3),
+        lambda: mmr_topk(emb, queries, k=3, n_candidates=6),
     ):
         before = n_persistent()
         result = fn()
@@ -245,3 +262,72 @@ def test_iterative_ops_release_superseded_round_state(spark):
         assert rows > 0
         # exactly the returned frame's checkpoint may remain
         assert n_persistent() <= before + 1
+
+
+def test_round_driver_stops_at_convergence_or_budget(spark):
+    """plans/iterate.Rounds.iterate: the first round whose convergence
+    test passes is the last; without one the budget runs exactly; the
+    returned state is readable after the scope exits, and every other
+    round's checkpoint is gone."""
+    from pyspark.sql import functions as F
+
+    from waka_spark.plans.iterate import Rounds
+
+    def n_persistent():
+        return len(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    def run(max_iter, converged=None):
+        steps = []
+
+        def step(state):
+            steps.append(1)
+            return state.select((F.col("x") + 1).alias("x"))
+
+        before = n_persistent()
+        with Rounds(spark) as rounds:
+            state = rounds.checkpoint(spark.range(3).select(
+                F.col("id").alias("x")))
+            state = rounds.keep(
+                rounds.iterate(state, step, max_iter, converged=converged))
+        assert n_persistent() <= before + 1
+        return len(steps), sorted(r["x"] for r in state.collect())
+
+    # converges at round 4 (min x reaches 4), well inside the budget
+    assert run(10, lambda s: s.agg(F.min("x")).first()[0] >= 4) == (
+        4, [4, 5, 6])
+    # never converges: exactly the budget
+    assert run(6, lambda s: False) == (6, [6, 7, 8])
+    assert run(5) == (5, [5, 6, 7])
+
+
+def test_parallel_floor_falls_back_to_partition_count(spark):
+    """When the optimizer stats probe raises, parallel_floor decides by
+    partition count (as for unknown Long.MaxValue stats) instead of
+    assuming a small input: a frame already spread over >= cores
+    partitions comes back as is, a narrower one is re-spread. When the
+    probe works, a large estimate alone leaves even a one-partition frame
+    alone."""
+    from waka_spark.plans.parallel import parallel_floor
+
+    huge = spark.range(0, 10**12, 1, 1)  # estimate 8 TB, one partition
+    assert parallel_floor(huge, "id") is huge
+
+    class NoStats:
+        """Delegates to a frame whose stats probe raises."""
+
+        def __init__(self, df):
+            self._df = df
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("stats unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._df, name)
+
+    cores = spark.sparkContext.defaultParallelism
+    wide = NoStats(spark.range(100).repartition(cores))
+    assert parallel_floor(wide, "id") is wide
+    narrow = NoStats(spark.range(100).coalesce(1))
+    assert parallel_floor(narrow, "id").rdd.getNumPartitions() == 2 * cores

@@ -1416,10 +1416,9 @@ def mmr_topk(
 
     Output: (q_id, vec_id, mmr_rank, relevance, mmr_score).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.iterate import Rounds
 
     lam_num = int(round(lam * 10))
-    ck = TrackedCheckpoints(embeddings.sparkSession)
     joined = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"),
     ).crossJoin(
@@ -1428,22 +1427,30 @@ def mmr_topk(
     ).filter(F.col("vec_id") != F.col("q_id"))
     w_rel = Window.partitionBy("q_id").orderBy(
         F.col("relevance").desc(), F.col("vec_id").asc())
-    cand = ck.checkpoint(
-        joined.withColumn(
-            "relevance", F.round(cosine(F.col("_v"), F.col("_qv")), 6))
-        .withColumn("_rn", F.row_number().over(w_rel))
-        .filter(F.col("_rn") <= n_candidates)
-        .select("q_id", "vec_id", "_v", "relevance")
-    )
-
     rel_u = F.round(F.col("relevance") * 1e6, 0).cast("long")
     w_pick = Window.partitionBy("q_id").orderBy(
         F.col("_score_u").desc(), F.col("vec_id").asc())
-    selected = None
-    for r in range(1, k + 1):
-        if selected is None:
-            scored = cand.withColumn("_score_u", F.lit(lam_num) * rel_u)
-        else:
+
+    def pick(scored: DataFrame, rank: int) -> DataFrame:
+        return (
+            scored.withColumn("_pick", F.row_number().over(w_pick))
+            .filter(F.col("_pick") == 1)
+            .select("q_id", "vec_id", "_v", "relevance",
+                    (F.col("_score_u") / F.lit(1e7)).alias("mmr_score"),
+                    F.lit(rank).alias("mmr_rank"))
+        )
+
+    with Rounds(embeddings.sparkSession) as rounds:
+        cand = rounds.checkpoint(
+            joined.withColumn(
+                "relevance", F.round(cosine(F.col("_v"), F.col("_qv")), 6))
+            .withColumn("_rn", F.row_number().over(w_rel))
+            .filter(F.col("_rn") <= n_candidates)
+            .select("q_id", "vec_id", "_v", "relevance")
+        )
+        ranks = iter(range(2, k + 1))
+
+        def step(selected: DataFrame) -> DataFrame:
             remaining = cand.join(
                 selected.select("q_id", "vec_id"),
                 ["q_id", "vec_id"], "left_anti")
@@ -1467,19 +1474,10 @@ def mmr_topk(
                 "_score_u",
                 F.lit(lam_num) * rel_u
                 - F.lit(10 - lam_num) * F.col("_pen_u"))
-        win = (
-            scored.withColumn("_pick", F.row_number().over(w_pick))
-            .filter(F.col("_pick") == 1)
-            .select("q_id", "vec_id", "_v", "relevance",
-                    (F.col("_score_u") / F.lit(1e7)).alias("mmr_score"),
-                    F.lit(r).alias("mmr_rank"))
-        )
-        new_sel = (
-            win if selected is None else selected.unionByName(win))
-        new_sel = ck.checkpoint(new_sel)
-        if selected is not None:
-            ck.release(selected)
-        selected = new_sel
-    ck.release_all_except(selected)
+            return selected.unionByName(pick(scored, next(ranks)))
+
+        selected = rounds.checkpoint(pick(
+            cand.withColumn("_score_u", F.lit(lam_num) * rel_u), 1))
+        selected = rounds.keep(rounds.iterate(selected, step, k - 1))
     return selected.select(
         "q_id", "vec_id", "mmr_rank", "relevance", "mmr_score")

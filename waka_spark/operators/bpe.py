@@ -104,17 +104,12 @@ def bpe_learn(
     run persists; swap in a longer corpus or more rounds and the plan
     shape is unchanged.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    from waka_spark.plans.iterate import Rounds
 
     spark = df.sparkSession
-    ck = TrackedCheckpoints(spark)
-    vocab = ck.checkpoint(
-        word_counts(df, id_col, text_col)
-        .select(_bracketed(F.col("word")).alias("sym"), "cnt")
-    )
-
     merges: list[tuple[int, str, str, int]] = []
-    for i in range(n_merges):
+
+    def merge_top_pair(vocab: DataFrame) -> DataFrame:
         top = (
             _pair_counts(vocab)
             .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
@@ -122,10 +117,10 @@ def bpe_learn(
             .collect()
         )
         if not top:
-            break
+            return vocab  # every word is one symbol: a fixpoint
         l, r, c = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
-        merges.append((i, l, r, int(c)))
-        new_vocab = vocab.select(
+        merges.append((len(merges), l, r, int(c)))
+        return vocab.select(
             F.replace(
                 F.col("sym"),
                 F.lit(f"[{l}][{r}]"),
@@ -133,12 +128,16 @@ def bpe_learn(
             ).alias("sym"),
             "cnt",
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            new_vocab = ck.checkpoint(new_vocab)
-            ck.release_all_except(new_vocab)
-        vocab = new_vocab
 
-    ck.release_all_except()
+    # the merge table is driver-side, so every vocab frame dies with the
+    # scope
+    with Rounds(spark) as rounds:
+        vocab = rounds.checkpoint(
+            word_counts(df, id_col, text_col)
+            .select(_bracketed(F.col("word")).alias("sym"), "cnt")
+        )
+        rounds.iterate(vocab, merge_top_pair, n_merges,
+                       every=_CHECKPOINT_EVERY)
     return spark.createDataFrame(
         merges, "merge_idx int, lhs string, rhs string, pair_count long"
     )

@@ -7,30 +7,30 @@ materialized nodes/edges tables (sinks.py, plans/unionfind.py) invite the
 standard graph passes — centrality for entity importance ranking, triangle
 count for clustering-coefficient quality checks on the resolved graph.
 
-Scale shapes (both pure DataFrame ops, no UDFs):
+Scale shapes (pure DataFrame ops, no UDFs):
 
-- ``pagerank``: the Pregel iteration as join+agg. Per round: ranks ⋈
-  edges on src (hash join co-partitioned with the edge shuffle), groupBy
-  dst (map-side partial sums), one ``localCheckpoint`` to cut lineage
-  (same round discipline as plans/unionfind.py), and the superseded
-  round's checkpoint blocks RELEASED so executor storage holds two
-  rounds of state, never n_iter (plans/iterate.py). Edges and degrees
-  are computed once and persisted (unpersisted on return); each round
-  shuffles only (node, rank) pairs — the minimum possible state. Convergence is a fixed iteration
-  budget (deterministic, oracle-portable) rather than an epsilon test,
-  which would add a driver-side action per round.
-- ``triangle_count``: the two-path join with the canonical a<b<c
-  ordering, so every triangle is generated exactly once and the join
-  never enumerates a pair twice. Input edges are deduped + symmetrized
-  first; skew guard is the standard one — high-degree nodes dominate the
-  two-path fan-out, so callers cap degree upstream if the graph has hubs.
+- Iterative operators (``pagerank``, ``personalized_pagerank``, ``hits``,
+  ``bfs_distances``, ``label_propagation``, ``k_core``, ``k_truss``) are
+  Pregel iterations as join+agg, each a round step handed to the one
+  round driver (plans/iterate.py): every round is eagerly
+  ``localCheckpoint``-ed to cut lineage and the superseded round's blocks
+  are released, so executor storage holds two rounds of state, never
+  n_iter. Per round only (node, state) pairs shuffle, broadcast when the
+  exact node count says they fit. Budgets are fixed (deterministic,
+  oracle-portable) rather than epsilon tests, which would add a
+  driver-side action per round; ``k_truss`` stops early at its fixpoint.
+  ``pagerank`` and ``personalized_pagerank`` share one round step and
+  differ only in the start vector and the restart term.
+- ``triangle_count`` / ``local_clustering_coefficient``: degree-ordered
+  orientation, then per-edge adjacency-array intersection
+  (:func:`_oriented_intersections`) — O(m^1.5) work regardless of hub
+  degree, and no wedge self-join.
 - ``label_propagation``: SYNCHRONOUS LPA (all nodes update from the
   previous round's labels simultaneously) with a total-order tie-break
   (count desc → label asc), so the result is deterministic under any
   partitioning — unlike classic asynchronous LPA, whose output depends
-  on visit order. Per round: one join (edges ⋈ labels on src, the same
-  co-partitioned shuffle as pagerank), one count agg, one per-node
-  argmax window; ``localCheckpoint`` cuts lineage per round.
+  on visit order. Per round: one join (edges ⋈ labels on src), one count
+  agg, and the per-node argmax as a min(struct(-cnt, label)) hash-agg.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from waka_spark.plans.iterate import Rounds
 from waka_spark.plans.parallel import maybe_broadcast, parallel_floor
 
 
@@ -85,6 +86,75 @@ def symmetrize(
     return out if assume_unique else out.distinct()
 
 
+def _rank_edges(
+    rounds: Rounds, edges: DataFrame, src: str, dst: str,
+    weight_col: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(e, out_edges) for :func:`pagerank` / :func:`personalized_pagerank`:
+    the edge list (src, dst, _w) and the same rows with the source's
+    out-weight ``outdeg`` attached, computed once before the rounds."""
+    w_expr = (
+        F.lit(1.0) if weight_col is None
+        else F.col(weight_col).cast("double")
+    )
+    # EAGER: the node union scans e twice (union branches) in one job; a
+    # lazy persist makes those sibling stages race to populate the cold
+    # cache and each recompute the upstream edge build (see random_walks)
+    e = rounds.checkpoint(
+        _floor_edges(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"),
+            w_expr.alias("_w")))
+    deg = e.groupBy("src").agg(
+        F.count("*").cast("double").alias("outdeg")
+        if weight_col is None else F.sum("_w").alias("outdeg"))
+    return e, rounds.persist(e.join(deg, "src"))
+
+
+def _rank_rounds(
+    rounds: Rounds, out_edges: DataFrame, nodes: DataFrame,
+    ranks: DataFrame, n: int, n_iter: int, damping: float,
+    restart: F.Column,
+) -> DataFrame:
+    """The power iteration both PageRanks share: each round
+    rank'(v) = restart(v) + d·Σ_{u→v} rank(u)·w(u,v)/wdeg(u). ``nodes``
+    carries every column ``restart`` reads; ``n`` is the node count that
+    sizes the broadcast of the per-round state."""
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contribs = (
+            out_edges.join(
+                _maybe_broadcast(ranks, n),
+                out_edges["src"] == ranks["node"])
+            .select(
+                F.col("dst").alias("node"),
+                (F.col("rank") * F.col("_w") / F.col("outdeg")).alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        return (
+            nodes.join(_maybe_broadcast(contribs, n), "node", "left")
+            .select(
+                "node",
+                (
+                    restart
+                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                ).alias("rank"),
+            )
+        )
+
+    return rounds.keep(rounds.iterate(ranks, step, n_iter))
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct endpoints of an edge list → (node)."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = 10,
@@ -112,72 +182,19 @@ def pagerank(
     one agg per round over (node, rank) pairs only; ``localCheckpoint``
     flattens lineage so round t+1's plan does not replay rounds 1..t.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    w_expr = (
-        F.lit(1.0) if weight_col is None
-        else F.col(weight_col).cast("double")
-    )
-    # EAGER: nodes below scans e twice (union branches) in one job; a lazy
-    # persist makes those sibling stages race to populate the cold cache
-    # and each recompute the upstream edge build (see random_walks)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            w_expr.alias("_w")))
-    deg = e.groupBy("src").agg(
-        F.count("*").cast("double").alias("outdeg")
-        if weight_col is None else F.sum("_w").alias("outdeg"))
-    out_edges = e.join(deg, "src").persist()
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge list (e.g. an upstream similarity threshold left no
-        # edges): return an empty (node, rank) frame with the right
-        # schema instead of a driver-side ZeroDivisionError
-        for helper in (out_edges, nodes):
-            helper.unpersist(False)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-
-    ranks = ck.checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
-    base = (1.0 - damping) / n
-    for _ in range(n_iter):
-        contribs = (
-            out_edges.join(
-                _maybe_broadcast(ranks, n),
-                out_edges["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("_w") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = ck.checkpoint(
-            nodes.join(_maybe_broadcast(contribs, n), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        # round t's ranks are dead once round t+1 is materialized: keep
-        # storage at two rank tables, not n_iter (plans/iterate.py)
-        ck.release(ranks)
-        ranks = new_ranks
-    ck.release_all_except(ranks)
-    for helper in (out_edges, nodes):
-        helper.unpersist(False)
-    return ranks
+    with Rounds(edges.sparkSession) as rounds:
+        e, out_edges = _rank_edges(rounds, edges, src, dst, weight_col)
+        nodes = rounds.persist(_node_set(e))
+        n = nodes.count()
+        if n == 0:
+            # empty edge list (e.g. an upstream similarity threshold left
+            # no edges): an empty (node, rank) frame with the right schema
+            # instead of a driver-side ZeroDivisionError
+            return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+        ranks = rounds.checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
+        return _rank_rounds(
+            rounds, out_edges, nodes, ranks, n, n_iter, damping,
+            F.lit((1.0 - damping) / n))
 
 
 def hits(
@@ -206,59 +223,51 @@ def hits(
     out- or in-edges on one side) keep score 0 from that side's update,
     matching the adjacency-matrix formulation.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    with Rounds(edges.sparkSession) as rounds:
+        # EAGER: the node union scans e twice (union branches) in one job —
+        # same lazy-persist race as pagerank's edge build
+        e = rounds.checkpoint(
+            _floor_edges(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct())
+        nodes = rounds.persist(_node_set(e))
+        n = nodes.count()
+        if n == 0:
+            return nodes.select(
+                "node", F.lit(0.0).alias("hub"),
+                F.lit(0.0).alias("authority")).limit(0)
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    # EAGER: nodes below scans e twice (union branches) in one job — same
-    # lazy-persist race as pagerank's edge build
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct())
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist(False)
-        return nodes.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority"))
-
-    scores = ck.checkpoint(nodes.select(
-        "node",
-        F.lit(1.0 / n).alias("hub"),
-        F.lit(1.0 / n).alias("authority"),
-    ))
-    for _ in range(n_iter):
-        auth = (
-            e.join(_maybe_broadcast(
-                scores.select(F.col("node").alias("src"), "hub"), n), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("authority"))
-        )
-        hub = (
-            e.join(_maybe_broadcast(
-                auth.select(F.col("node").alias("dst"),
-                            F.col("authority").alias("_av")), n), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("_av").alias("hub"))
-        )
-        new_scores = ck.checkpoint(
-            nodes.join(_maybe_broadcast(hub, n), "node", "left")
-            .join(_maybe_broadcast(auth, n), "node", "left")
-            .select(
-                "node",
-                F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+        def step(scores: DataFrame) -> DataFrame:
+            auth = (
+                e.join(_maybe_broadcast(
+                    scores.select(F.col("node").alias("src"), "hub"), n),
+                    "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("authority"))
             )
-        )
-        ck.release(scores)
-        scores = new_scores
-    ck.release_all_except(scores)
-    nodes.unpersist(False)
+            hub = (
+                e.join(_maybe_broadcast(
+                    auth.select(F.col("node").alias("dst"),
+                                F.col("authority").alias("_av")), n), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("_av").alias("hub"))
+            )
+            return (
+                nodes.join(_maybe_broadcast(hub, n), "node", "left")
+                .join(_maybe_broadcast(auth, n), "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                    F.coalesce("authority", F.lit(0.0)).alias("authority"),
+                )
+            )
+
+        scores = rounds.checkpoint(nodes.select(
+            "node",
+            F.lit(1.0 / n).alias("hub"),
+            F.lit(1.0 / n).alias("authority"),
+        ))
+        scores = rounds.keep(rounds.iterate(scores, step, n_iter))
     norms = scores.agg(
         F.sum("hub").alias("_hn"), F.sum("authority").alias("_an"))
     return scores.crossJoin(F.broadcast(norms)).select(
@@ -292,44 +301,42 @@ def bfs_distances(
     table is already the small side and the simple fold keeps every round
     a two-stage job.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    with Rounds(edges.sparkSession) as rounds:
+        e = rounds.persist(_floor_edges(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst")))
+        # seeds are deduped and intersected with the graph's node set
+        # (round-3 fix): stale/foreign seed ids (entities resolved away by
+        # a merge pass) must not surface as phantom dist-0 rows in a
+        # result whose contract is "reached GRAPH nodes", and duplicate
+        # seeds must not duplicate output rows. Semi join needs no
+        # distinct on the endpoint union. Same guard personalized_pagerank
+        # applies.
+        graph_nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+        )
+        dist = rounds.checkpoint(
+            seeds.select(F.col(node).alias("node")).distinct()
+            .join(graph_nodes, "node", "left_semi")
+            .select("node", F.lit(0).cast("long").alias("dist"))
+        )
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    # seeds are deduped and intersected with the graph's node set
-    # (round-3 fix): stale/foreign seed ids (entities resolved away by a
-    # merge pass) must not surface as phantom dist-0 rows in a result
-    # whose contract is "reached GRAPH nodes", and duplicate seeds must
-    # not duplicate output rows. Semi join needs no distinct on the
-    # endpoint union. Same guard personalized_pagerank applies.
-    graph_nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-    )
-    dist = ck.checkpoint(
-        seeds.select(F.col(node).alias("node")).distinct()
-        .join(graph_nodes, "node", "left_semi")
-        .select("node", F.lit(0).cast("long").alias("dist"))
-    )
-    for _ in range(n_iter):
-        # per-round count is exact and near-free (dist is materialized);
-        # it drives the broadcast-vs-shuffle choice (_maybe_broadcast)
-        expanded = (
-            e.join(_maybe_broadcast(dist, dist.count()),
-                   e["src"] == dist["node"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        new_dist = ck.checkpoint(
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        ck.release(dist)
-        dist = new_dist
-    ck.release_all_except(dist)
-    e.unpersist(False)
-    return dist
+        def step(dist: DataFrame) -> DataFrame:
+            # per-round count is exact and near-free (dist is
+            # materialized); it drives the broadcast-vs-shuffle choice
+            expanded = (
+                e.join(_maybe_broadcast(dist, dist.count()),
+                       e["src"] == dist["node"])
+                .select(F.col("dst").alias("node"),
+                        (F.col("dist") + 1).alias("dist"))
+            )
+            return (
+                dist.unionByName(expanded)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+            )
+
+        return rounds.keep(rounds.iterate(dist, step, n_iter))
 
 
 def label_propagation(
@@ -358,57 +365,49 @@ def label_propagation(
     Fixed iteration budget keeps it oracle-portable (the SQL mirror
     chains one CTE per round).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    with Rounds(edges.sparkSession) as rounds:
+        # EAGER e: the node union scans it twice in one job (race — see
+        # random_walks / pagerank)
+        e = rounds.checkpoint(
+            _floor_edges(edges, src).select(
+                F.col(src).alias("src"), F.col(dst).alias("dst")))
+        nodes = rounds.persist(_node_set(e))
+        labels = rounds.checkpoint(
+            nodes.withColumn("community", F.col("node")))
+        # node count (cheap — labels just materialized) drives the
+        # broadcast-vs-shuffle choice for every round's state join
+        n = labels.count()
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    # EAGER e: the nodes union scans it twice in one job (race — see
-    # random_walks / pagerank)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-
-    labels = ck.checkpoint(nodes.withColumn("community", F.col("node")))
-    # node count (cheap — labels just materialized) drives the broadcast-
-    # vs-shuffle choice for every round's state join (_maybe_broadcast)
-    n = labels.count()
-    for _ in range(n_iter):
-        # per-node argmax as min(struct(-cnt, community)) instead of a
-        # row_number window (round 6): struct ordering is field-wise, so
-        # the min picks (largest cnt, then smallest community) — the same
-        # row the (cnt desc, community asc) window rank 1 picked — but a
-        # hash-agg does map-side partials and never sorts the per-node
-        # candidate lists the window had to materialize.
-        neigh = (
-            e.join(_maybe_broadcast(labels, n), e["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"), "community")
-            .agg(F.count("*").alias("cnt"))
-            .groupBy("node")
-            .agg(F.min(F.struct(
-                (-F.col("cnt")).alias("_neg"),
-                F.col("community").alias("community"),
-            )).alias("_top"))
-            .select("node", F.col("_top.community").alias("community"))
-        )
-        new_labels = ck.checkpoint(
-            labels.join(_maybe_broadcast(
-                neigh.withColumnRenamed("community", "_new"), n),
-                "node", "left")
-            .select(
-                "node",
-                F.coalesce("_new", "community").alias("community"),
+        def step(labels: DataFrame) -> DataFrame:
+            # per-node argmax as min(struct(-cnt, community)) instead of a
+            # row_number window (round 6): struct ordering is field-wise,
+            # so the min picks (largest cnt, then smallest community) —
+            # the same row the (cnt desc, community asc) window rank 1
+            # picked — but a hash-agg does map-side partials and never
+            # sorts the per-node candidate lists the window materialized.
+            neigh = (
+                e.join(_maybe_broadcast(labels, n),
+                       e["src"] == labels["node"])
+                .groupBy(F.col("dst").alias("node"), "community")
+                .agg(F.count("*").alias("cnt"))
+                .groupBy("node")
+                .agg(F.min(F.struct(
+                    (-F.col("cnt")).alias("_neg"),
+                    F.col("community").alias("community"),
+                )).alias("_top"))
+                .select("node", F.col("_top.community").alias("community"))
             )
-        )
-        ck.release(labels)
-        labels = new_labels
-    ck.release_all_except(labels)
-    nodes.unpersist(False)
-    return labels
+            return (
+                labels.join(_maybe_broadcast(
+                    neigh.withColumnRenamed("community", "_new"), n),
+                    "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("_new", "community").alias("community"),
+                )
+            )
+
+        return rounds.keep(rounds.iterate(labels, step, n_iter))
 
 
 def k_core(
@@ -432,71 +431,45 @@ def k_core(
     endpoint (hash joins on the node key) + one count agg — survivor
     state is (node) only; ``localCheckpoint`` cuts lineage each round.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
+    with Rounds(edges.sparkSession) as rounds:
+        e = rounds.persist(_floor_edges(edges, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst")))
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    alive = ck.checkpoint(e.select(F.col("src").alias("node")).distinct())
-    deg = None
-    prev_alive = None
-    for _ in range(n_iter):
-        # per-round count is exact and near-free (alive is materialized);
-        # broadcast the survivor set into both semi joins when it fits
-        # (_maybe_broadcast) instead of shuffling the edge table twice
-        n_alive = alive.count()
-        live_edges = (
-            e.join(_maybe_broadcast(
-                alive.withColumnRenamed("node", "src"), n_alive),
-                "src", "left_semi")
-            .join(_maybe_broadcast(
-                alive.withColumnRenamed("node", "dst"), n_alive),
-                "dst", "left_semi")
-        )
-        deg = (
-            live_edges.groupBy(F.col("src").alias("node"))
-            .agg(F.count("*").cast("long").alias("degree"))
-            .filter(F.col("degree") >= k)
-        )
-        new_alive = ck.checkpoint(deg.select("node"))
-        # release lags ONE round: the lazy `deg` kept for the final
-        # re-evaluation below still reads this round's INPUT survivor set,
-        # so only the round-before-last's alive is provably dead here
-        if prev_alive is not None:
-            ck.release(prev_alive)
-        prev_alive, alive = alive, new_alive
-    # degrees RECOMPUTED over the FINAL survivor set (round-3 fix): the
-    # last round's `deg` measured degrees against the set entering that
-    # round, so on non-converged runs the reported counts included
-    # neighbors that round peeled — wrong even within the returned
-    # subgraph. Same final-recompute discipline as k_truss's support.
-    # Converged runs are unchanged (nothing peeled ⇒ same degrees).
-    n_alive = alive.count()
-    final_edges = (
-        e.join(_maybe_broadcast(
-            alive.withColumnRenamed("node", "src"), n_alive),
-            "src", "left_semi")
-        .join(_maybe_broadcast(
-            alive.withColumnRenamed("node", "dst"), n_alive),
-            "dst", "left_semi")
-    )
-    # left-join the recomputed degrees onto the survivor set (round-4,
-    # ADVICE): on NON-converged runs a survivor whose last-round
-    # neighbors were all peeled has zero surviving edges — a groupBy
-    # over final_edges alone silently dropped it from the output, i.e.
-    # the survivor set shrank beyond the documented semantics. Every
-    # surviving node is reported, zero-degree ones with degree 0.
-    final_deg = (
-        final_edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
-    result = ck.checkpoint(
-        alive.join(final_deg, "node", "left").select(
-            "node", F.coalesce("degree", F.lit(0)).alias("degree"))
-    )
-    ck.release_all_except(result)
-    e.unpersist(False)
-    return result
+        def degrees(alive: DataFrame) -> DataFrame:
+            # per-node degree among the survivors. The survivor count is
+            # exact and near-free (alive is materialized); broadcast the
+            # survivor set into both semi joins when it fits
+            # (_maybe_broadcast) instead of shuffling the edge table twice
+            n_alive = alive.count()
+            return (
+                e.join(_maybe_broadcast(
+                    alive.withColumnRenamed("node", "src"), n_alive),
+                    "src", "left_semi")
+                .join(_maybe_broadcast(
+                    alive.withColumnRenamed("node", "dst"), n_alive),
+                    "dst", "left_semi")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.count("*").cast("long").alias("degree"))
+            )
+
+        alive = rounds.checkpoint(
+            e.select(F.col("src").alias("node")).distinct())
+        alive = rounds.iterate(
+            alive,
+            lambda alive: degrees(alive)
+            .filter(F.col("degree") >= k).select("node"),
+            n_iter)
+        # degrees RECOMPUTED over the FINAL survivor set (round-3 fix):
+        # the last round measured degrees against the set entering it, so
+        # on non-converged runs those counts included neighbors that round
+        # peeled. Left-joined onto the survivor set (round-4): a survivor
+        # whose last-round neighbors were all peeled has no surviving
+        # edge, and is reported with degree 0 rather than dropped.
+        # Converged runs are unchanged (nothing peeled ⇒ same degrees).
+        return rounds.keep(rounds.checkpoint(
+            alive.join(degrees(alive), "node", "left").select(
+                "node", F.coalesce("degree", F.lit(0)).alias("degree"))
+        ))
 
 
 def common_neighbors(
@@ -526,16 +499,15 @@ def common_neighbors(
     ``min_common`` prunes the long tail of 1-wedge pairs before the
     anti-join.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: e feeds the wedge self-join's two sides plus the adjacency
     # anti-join — sibling branches of one action (lazy-persist race, see
     # random_walks)
-    e = TrackedCheckpoints(edges.sparkSession).checkpoint(
+    e = (
         _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"))
+            F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     # hub cap narrows WEDGE GENERATION only; the adjacency anti-join below
     # still sees every edge, so capped output never re-proposes a pair
@@ -568,8 +540,7 @@ def common_neighbors(
 
 
 def _oriented_intersections(
-    edges: DataFrame, src: str, dst: str,
-    ck=None, assume_canonical: bool = False,
+    edges: DataFrame, src: str, dst: str, assume_canonical: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared degree-ordered triangle enumeration (Suri & Vassilvitskii,
     "Counting Triangles and the Curse of the Last Reducer", WWW'11):
@@ -595,13 +566,10 @@ def _oriented_intersections(
     ``_w`` is the (possibly empty) array of triangle-closing third
     corners.
 
-    ``ck``: pass a caller-owned :class:`TrackedCheckpoints` so the
-    internal eager checkpoints register with IT — an iterative caller
-    (k_truss) then releases them once its per-round result materializes,
-    instead of leaking ~an edge-table copy per round into a discarded
-    tracker until session end. With the default (own tracker), a one-shot
-    caller's internals live until the session drops them — the same
-    lifetime its own result has.
+    The internal eager checkpoints live as long as the session, the same
+    lifetime a one-shot caller's result has; when the enumeration runs
+    inside a round step (k_truss), the round driver frees them once the
+    round's state is materialized (plans/iterate.py).
 
     ``assume_canonical``: skip the least/greatest + self-loop + distinct
     canonicalization (and its checkpoint) when the input is ALREADY a
@@ -609,36 +577,34 @@ def _oriented_intersections(
     its checkpointed round state every round, and re-canonicalizing it
     paid a provably redundant edge-wide dedup shuffle per round.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER checkpoints: canon feeds the degree union (2 branches) and the
     # join; oriented feeds e1/e2/closing (3 branches) — all siblings of
     # ONE action, which with a lazy persist race to populate the cold
     # cache and recompute the upstream edge build per branch (see
     # random_walks)
-    if ck is None:
-        ck = TrackedCheckpoints(edges.sparkSession)
     if assume_canonical:
         canon = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
-        canon = ck.checkpoint(
+        canon = (
             _floor_edges(edges, src).select(
                 F.least(F.col(src), F.col(dst)).alias("a"),
                 F.greatest(F.col(src), F.col(dst)).alias("b"),
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
     # deg is node-sized — materialize it (one tiny job) so its exact row
     # count can drive a broadcast for the two degree-attach joins below;
     # with unknown ExistingRDD stats the planner otherwise sort-merges,
     # shuffling AND sorting the full edge list twice per enumeration
     # (k_truss pays that per round) (round 6)
-    deg = ck.checkpoint(
+    deg = (
         canon.select(F.col("a").alias("node"))
         .unionByName(canon.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").cast("long").alias("deg"))
+        .localCheckpoint(eager=True)
     )
     n_deg = deg.count()
     with_deg = (
@@ -674,7 +640,7 @@ def _oriented_intersections(
     )
     if canon.rdd.getNumPartitions() < sc.defaultParallelism:
         pre = pre.repartition(2 * sc.defaultParallelism, "u")
-    oriented = ck.checkpoint(pre)
+    oriented = pre.localCheckpoint(eager=True)
     # Close triangles by adjacency-array intersection instead of a wedge
     # self-join (round 6): the wedge formulation materialized every
     # ordered out-neighbor pair through an exchange — O(Σ d_out²) rows,
@@ -706,27 +672,9 @@ def _oriented_intersections(
     return deg, closed
 
 
-def _oriented_triangles(
-    edges: DataFrame, src: str, dst: str,
-    ck=None, assume_canonical: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """(deg, triangles): one (u, x, y) row per triangle — apex u, out-
-    neighbors x before y in the (deg, id) order. Thin explode over
-    :func:`_oriented_intersections`; consumers that only need per-corner
-    or per-edge COUNTS should aggregate the intersection rows directly
-    (triangle_count, local_clustering_coefficient, k_truss do) — fanning
-    a non-materialized triangle list out to several union branches
-    re-runs the whole intersection pass once per branch."""
-    deg, closed = _oriented_intersections(
-        edges, src, dst, ck=ck, assume_canonical=assume_canonical)
-    triangles = closed.select(
-        "u", F.col("v").alias("x"), F.explode("_w").alias("y"))
-    return deg, triangles
-
-
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Total triangles in the undirected graph induced by ``edges``, via
-    the degree-ordered enumeration in :func:`_oriented_triangles`.
+    the degree-ordered enumeration in :func:`_oriented_intersections`.
 
     Plan shape: one hash-agg for degrees, two hash joins to attach them,
     two (broadcast-eligible) adjacency joins, one global sum over the
@@ -747,7 +695,7 @@ def local_clustering_coefficient(
     get lcc 0 (Watts-Strogatz convention).
 
     Reuses the degree-ordered triangle enumeration
-    (:func:`_oriented_triangles`) and fans each triangle out to its three
+    (:func:`_oriented_intersections`) and fans each triangle out to its three
     corners — one extra narrow explode + hash-agg over triangle count, so
     the O(m^1.5) wedge bound carries over unchanged. The corner fan-out is
     3 rows per triangle regardless of hub degree; the per-node count agg
@@ -822,18 +770,12 @@ def random_walks(
 
     Output: (walk_id, step, node) — step 0 is the start node itself.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")))
-    frontier = ck.checkpoint(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .select(F.col("node").alias("walk_id"), F.col("node").alias("cur"))
-    )
+    e = _floor_edges(edges, src).select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"),
+    ).localCheckpoint(eager=True)
+    frontier = _node_set(e).select(
+        F.col("node").alias("walk_id"), F.col("node").alias("cur"),
+    ).localCheckpoint(eager=True)
     # walk count, exact and cheap (frontier just materialized): the
     # frontier only shrinks (sink walks end), so one count bounds every
     # step's broadcast decision (_maybe_broadcast — without it the
@@ -857,7 +799,7 @@ def random_walks(
             .agg(F.min(F.struct(F.col("_h"), F.col("dst"))).alias("_m"))
             .select("walk_id", F.col("_m.dst").alias("cur"))
         )
-        frontier = ck.checkpoint(hop)
+        frontier = hop.localCheckpoint(eager=True)
         out = out.unionByName(frontier.select(
             "walk_id", F.lit(s).alias("step"), F.col("cur").alias("node")))
     return out
@@ -887,14 +829,13 @@ def cooccurrence_pmi(
 
     Output: (item_a, item_b, n_ab, pmi), pairs with n_ab ≥ ``min_pairs``.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: occ feeds n_groups, marginals, and both pair-join sides —
     # sibling branches of one action (lazy-persist race, see random_walks)
-    occ = TrackedCheckpoints(occurrences.sparkSession).checkpoint(
+    occ = (
         occurrences.select(
             F.col(group_col).alias("grp"), F.col(item_col).alias("item"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     n_groups = occ.select("grp").distinct().agg(
         F.count("*").alias("_n_groups"))
@@ -963,9 +904,6 @@ def modularity(
     a pruned/partial assignment.
 
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
     e = _floor_edges(edges, src).select(
         F.col(src).alias("src"), F.col(dst).alias("dst"))
     # labels usually arrive as label_propagation's checkpointed output —
@@ -973,8 +911,9 @@ def modularity(
     # re-shuffle) the edge table. The label table is node-sized:
     # materialize it once, count it (near-free), broadcast when it fits
     # (round 6, _maybe_broadcast).
-    lab = ck.checkpoint(labels.select(
-        F.col(node_col).alias("_n"), F.col(community_col).alias("_c")))
+    lab = labels.select(
+        F.col(node_col).alias("_n"), F.col(community_col).alias("_c"),
+    ).localCheckpoint(eager=True)
     n_lab = lab.count()
     la = _maybe_broadcast(lab.select(
         F.col("_n").alias("src"), F.col("_c").alias("_ca")), n_lab)
@@ -983,8 +922,7 @@ def modularity(
 
     # EAGER: tagged feeds deg / within / m — three sibling branches of one
     # action (lazy-persist race, see random_walks)
-    tagged = ck.checkpoint(
-        e.join(la, "src").join(lb, "dst"))
+    tagged = e.join(la, "src").join(lb, "dst").localCheckpoint(eager=True)
 
     deg = tagged.groupBy("_ca").agg(F.count("*").alias("d_c"))
     within = (
@@ -1038,15 +976,14 @@ def adamic_adar(
     Output: (node_a, node_b, n_common, aa_score), node_a < node_b,
     pairs with ≥ ``min_common`` shared neighbors, score rounded 6.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: e feeds wedge sides, the degree agg, and the adjacency
     # anti-join — sibling branches of one action (see random_walks)
-    e = TrackedCheckpoints(edges.sparkSession).checkpoint(
+    e = (
         _floor_edges(edges, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"))
+            F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     deg = e.groupBy("dst").agg(F.count("*").cast("long").alias("_d"))
     mids = e.join(deg, "dst")
@@ -1107,73 +1044,29 @@ def personalized_pagerank(
 
     Output: (node, rank).
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(edges.sparkSession)
-    w_expr = (
-        F.lit(1.0) if weight_col is None
-        else F.col(weight_col).cast("double")
-    )
-    e = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            w_expr.alias("_w")))
-    deg = e.groupBy("src").agg(
-        F.count("*").cast("double").alias("outdeg")
-        if weight_col is None else F.sum("_w").alias("outdeg"))
-    out_edges = e.join(deg, "src").persist()
-
-    all_nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seed_nodes = all_nodes.join(
-        seeds.select(F.col(seed_col).alias("node")), "node", "left_semi"
-    ).persist()
-    n_s = seed_nodes.count()
-    if n_s == 0:
-        raise ValueError("personalized_pagerank: no seed is a graph node")
-    nodes = (
-        all_nodes.join(
-            seed_nodes.withColumn("_sv", F.lit(1.0 / n_s)), "node", "left")
-        .select("node", F.coalesce("_sv", F.lit(0.0)).alias("_sv"))
-        .persist()
-    )
-
-    ranks = ck.checkpoint(nodes.select("node", F.col("_sv").alias("rank")))
-    # exact node count (cheap — ranks is already materialized): drives
-    # the broadcast-vs-shuffle choice for every round's state join
-    n = ranks.count()
-    restart = F.lit(1.0 - damping) * F.col("_sv")
-    for _ in range(n_iter):
-        contribs = (
-            out_edges.join(
-                _maybe_broadcast(ranks, n),
-                out_edges["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("_w") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
+    with Rounds(edges.sparkSession) as rounds:
+        e, out_edges = _rank_edges(rounds, edges, src, dst, weight_col)
+        all_nodes = _node_set(e)
+        seed_nodes = rounds.persist(all_nodes.join(
+            seeds.select(F.col(seed_col).alias("node")), "node",
+            "left_semi"))
+        n_s = seed_nodes.count()
+        if n_s == 0:
+            raise ValueError("personalized_pagerank: no seed is a graph node")
+        nodes = rounds.persist(
+            all_nodes.join(
+                seed_nodes.withColumn("_sv", F.lit(1.0 / n_s)), "node",
+                "left")
+            .select("node", F.coalesce("_sv", F.lit(0.0)).alias("_sv"))
         )
-        new_ranks = ck.checkpoint(
-            nodes.join(_maybe_broadcast(contribs, n), "node", "left")
-            .select(
-                "node",
-                (
-                    restart
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        ck.release(ranks)
-        ranks = new_ranks
-    ck.release_all_except(ranks)
-    for helper in (out_edges, nodes, seed_nodes):
-        helper.unpersist(False)
-    return ranks
+        ranks = rounds.checkpoint(
+            nodes.select("node", F.col("_sv").alias("rank")))
+        # exact node count (cheap — ranks is already materialized): drives
+        # the broadcast-vs-shuffle choice for every round's state join
+        n = ranks.count()
+        return _rank_rounds(
+            rounds, out_edges, nodes, ranks, n, n_iter, damping,
+            F.lit(1.0 - damping) * F.col("_sv"))
 
 
 def k_truss(
@@ -1195,32 +1088,22 @@ def k_truss(
     earlier and a documented over-approximation otherwise.
 
     Scale shape per round: one degree-ordered triangle enumeration
-    (:func:`_oriented_triangles` — O(m^1.5) wedge work regardless of hub
-    degree), a 3-corner fan-out to per-edge support counts (one
-    hash-agg), and an inner join + filter back onto the canonical edge
-    list (edges in no triangle have support 0 and drop via the join).
-    Round state is the canonical edge list only, eagerly checkpointed
-    and released (plans/iterate.py).
+    (:func:`_oriented_intersections` — O(m^1.5) wedge work regardless of
+    hub degree), a 3-corner fan-out to per-edge support counts (one
+    hash-agg), and a left join back onto the canonical edge list (edges
+    in no triangle get support 0). Round state is the canonical edge list
+    with each edge's support, eagerly checkpointed and released
+    (plans/iterate.py): round t peels the edges round t−1 measured below
+    k−2, then measures support on the survivors. A round whose
+    measurement peels nothing is the fixpoint — its support is the final
+    support — so the round driver stops there; otherwise the
+    (``n_iter``+1)-th measurement is the final one.
 
     Output: (node_a, node_b, support) for surviving edges, with support
     recomputed on the FINAL subgraph.
     """
-    from waka_spark.plans.iterate import TrackedCheckpoints
 
-    ck = TrackedCheckpoints(edges.sparkSession)
-    canon = ck.checkpoint(
-        _floor_edges(edges, src).select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def edge_support(e: DataFrame, sub=None) -> DataFrame:
-        # sub: per-round tracker — the enumeration's internal checkpoint
-        # registers there so the loop can free it once the round's
-        # support table is materialized (it leaked per-round before);
+    def edge_support(e: DataFrame) -> DataFrame:
         # assume_canonical: e is the checkpointed canonical round state,
         # re-canonicalizing it was a redundant dedup shuffle per round.
         # Support is summed in ONE pass over the intersection rows
@@ -1230,7 +1113,7 @@ def k_truss(
         # triangle list that re-ran the whole intersection pass per
         # branch (no exchange to reuse under the array formulation).
         _, closed = _oriented_intersections(
-            e, "a", "b", ck=sub, assume_canonical=True)
+            e, "a", "b", assume_canonical=True)
         nt = F.size("_w").cast("long")
         corners = closed.select(F.explode(F.concat(
             F.array(F.struct(F.least("u", "v").alias("a"),
@@ -1248,46 +1131,34 @@ def k_truss(
         return corners.groupBy("a", "b").agg(
             F.sum("c").cast("long").alias("support"))
 
-    # Peeling joins LEFT with coalesce(support, 0) (round-3 fix): an edge
-    # in no triangle has support 0, which still satisfies k-2 <= 0 — the
-    # old inner join silently dropped triangle-free edges even for k <= 2.
-    # Each round's support table is checkpointed BEFORE the filter so a
-    # converged round (no edges dropped) can reuse it as the final
-    # support verbatim — skipping the last O(m^1.5) triangle enumeration
-    # entirely (support over an unchanged edge set is unchanged).
-    n_edges = canon.count()
-    converged_supp = None
-    for _ in range(n_iter):
-        sub = TrackedCheckpoints(edges.sparkSession)
-        supp = ck.checkpoint(edge_support(canon, sub))
-        sub.release_all_except()  # enumeration internals now dead
-        new_canon = ck.checkpoint(
-            canon.join(supp, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
-            .select("a", "b")
-        )
-        n_new = new_canon.count()
-        if n_new == n_edges:
-            ck.release(new_canon)
-            converged_supp = supp
-            break
-        ck.release(canon)
-        ck.release(supp)
-        canon = new_canon
-        n_edges = n_new
+    def step(state: DataFrame) -> DataFrame:
+        # null support = not measured yet (round 0); the left join with
+        # coalesce(support, 0) keeps triangle-free edges (round-3 fix:
+        # support 0 still satisfies k-2 <= 0)
+        e = state.filter(
+            F.col("support").isNull() | (F.col("support") >= k - 2)
+        ).select("a", "b")
+        return e.join(edge_support(e), ["a", "b"], "left").select(
+            "a", "b",
+            F.coalesce("support", F.lit(0)).cast("long").alias("support"))
 
-    # non-converged: the final enumeration is consumed lazily by the
-    # returned frame, so its (single) internal checkpoint lives until
-    # the caller's action completes — one frame, not one per round
-    final_supp = (
-        converged_supp if converged_supp is not None
-        else edge_support(canon, ck)
-    )
-    final = canon.join(final_supp, ["a", "b"], "left").select(
-        F.col("a").alias("node_a"), F.col("b").alias("node_b"),
-        F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-    )
-    return final
+    with Rounds(edges.sparkSession) as rounds:
+        state = rounds.checkpoint(
+            _floor_edges(edges, src).select(
+                F.least(F.col(src), F.col(dst)).alias("a"),
+                F.greatest(F.col(src), F.col(dst)).alias("b"),
+            )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            .withColumn("support", F.lit(None).cast("long"))
+        )
+        state = rounds.iterate(
+            state, step, n_iter + 1,
+            converged=lambda s: s.filter(
+                F.col("support") < k - 2).limit(1).count() == 0)
+        return rounds.keep(state).select(
+            F.col("a").alias("node_a"), F.col("b").alias("node_b"),
+            "support")
 
 
 def extract_subgraph(

@@ -238,15 +238,14 @@ def bigram_logprob(
             ),
         ),
     ).otherwise(F.lit(None).cast(pair_t))
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER (not lazy persist): doc_bg feeds the model agg AND the scoring
     # join — sibling branches of one action would race to populate a cold
     # cache and each replay the explode+agg (see graph.random_walks)
-    doc_bg = TrackedCheckpoints(df.sparkSession).checkpoint(
+    doc_bg = (
         df.select(F.col(id_col).alias("doc_id"), F.explode(pairs).alias("p"))
         .groupBy("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=True)
     )
     model = doc_bg.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
     ctx = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
@@ -523,12 +522,10 @@ def slice_kl_divergence(
         ).cast("int").alias("bucket"),
     ).groupBy("slice", "bucket").agg(
         F.count("*").cast("long").alias("c_sb"))
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
     # EAGER: sb feeds the corpus marginal and the per-slice fold —
     # sibling branches of one action (lazy-persist race, see
     # graph.random_walks)
-    sb = TrackedCheckpoints(df.sparkSession).checkpoint(sb)
+    sb = sb.localCheckpoint(eager=True)
 
     corpus = sb.groupBy("bucket").agg(F.sum("c_sb").alias("c_b"))
     n_total = corpus.agg(F.sum("c_b").alias("n_corpus"))

@@ -451,10 +451,7 @@ def conv_near_dups(
     # the corpus): the consumers are sibling branches of ONE action, and a
     # lazy persist makes them race to populate the cold cache, each
     # replaying the corpus scan + md5 pass (see graph.random_walks).
-    from waka_spark.plans.iterate import TrackedCheckpoints
-
-    ck = TrackedCheckpoints(transcripts.sparkSession)
-    turns = ck.checkpoint(
+    turns = (
         transcripts.select(
             F.col(conv_col).alias("conv_id"),
             F.concat(
@@ -462,14 +459,15 @@ def conv_near_dups(
             ).alias("_hex"),
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    sizes_and_sigs = ck.checkpoint(turns.groupBy("conv_id").agg(
+    sizes_and_sigs = turns.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         *[
             F.min(F.substring("_hex", b * 8 + 1, 8)).alias(f"_s{b}")
             for b in range(n_bands)
         ],
-    ))
+    ).localCheckpoint(eager=True)
     sigs = sizes_and_sigs.select(
         "conv_id",
         F.explode(

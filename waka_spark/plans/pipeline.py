@@ -32,10 +32,7 @@ from waka_spark.operators.fusion import fuse_triples
 from waka_spark.operators.linking import link_entities
 from waka_spark.operators.ner import deterministic_ner_fused
 from waka_spark.operators.rel_linking import link_predicates
-from waka_spark.operators.relations import (
-    aho_relation_extraction,
-    rule_relation_extraction,
-)
+from waka_spark.operators.relations import aho_relation_extraction
 from waka_spark.operators.rerank import rerank_candidates, split_sentences
 
 
@@ -54,14 +51,6 @@ class KGPipeline:
     extra_scorer: Callable[[DataFrame], DataFrame] | None = None
     use_scorers: bool = True
     use_rerank: bool = True
-    # rule-RE backend: Aho-Corasick by DEFAULT (round-3) — one O(text)
-    # automaton pass per document regardless of rule count, vs the
-    # double-`contains` broadcast theta join whose per-document work is
-    # O(len(text) * n_rules). Output is identical (equivalence-pinned in
-    # tests/test_decoders.py); set False to get the pure-DataFrame theta
-    # join, which can win only for a handful of rules where the Arrow
-    # hop costs more than the extra scans.
-    use_aho_rules: bool = True
     cfg: EngineConfig = field(default_factory=lambda: DEFAULT)
 
     # ---- stages (each returns a DataFrame; all lazy) -----------------------
@@ -102,9 +91,10 @@ class KGPipeline:
         return cluster_entities(candidates)
 
     def raw_triples(self, documents: DataFrame) -> DataFrame:
-        if self.use_aho_rules:
-            return aho_relation_extraction(documents, self.rules)
-        return rule_relation_extraction(documents, self.rules)
+        # Aho-Corasick: one O(text) automaton pass per document regardless
+        # of rule count; output equals relations.rule_relation_extraction's
+        # double-`contains` theta join (pinned in tests/test_fake_transformers.py)
+        return aho_relation_extraction(documents, self.rules)
 
     def scan_products(
         self, documents: DataFrame
@@ -113,12 +103,11 @@ class KGPipeline:
         both stages are the deterministic defaults (document text crosses
         the JVM→Python boundary once instead of twice; identical per-stage
         output, pinned by tests/test_round6_scan_fusion.py). Subclassed
-        backends and the theta-join rule path keep the separate stages.
+        backends keep the separate stages.
         """
         uses_default_scans = (
             type(self).mentions is KGPipeline.mentions
             and type(self).raw_triples is KGPipeline.raw_triples
-            and self.use_aho_rules
         )
         if not uses_default_scans:
             return self.mentions(documents), self.raw_triples(documents)

@@ -58,6 +58,7 @@ class KGService:
             return self._construct(text, conv_id)
 
     def _construct(self, text: str, conv_id: str) -> dict:
+        from waka_spark.plans.iterate import release_new_rdds
         from waka_spark.plans.pins import pin_scope
 
         transcripts = self.spark.createDataFrame(
@@ -75,9 +76,8 @@ class KGService:
         #    blocks AND CacheManager entries.
         # 2. RDD-set snapshot: the per-stage localCheckpoint blocks are
         #    RDD-level pins with no DataFrame handle surviving the run;
-        #    release exactly the ids this run added.
-        persisted_before = self._persistent_rdd_ids()
-        with pin_scope():
+        #    release exactly the ids this run added, after both collects.
+        with release_new_rdds(self.spark), pin_scope():
             out = self.pipeline.run(transcripts, resolve=True)
             triples = [
                 {
@@ -96,17 +96,7 @@ class KGService:
                 for r in out["final_entities"]
                 .select("url", "label", "score").collect()
             ]
-        for rdd_id, jrdd in self._persistent_rdds():
-            if rdd_id not in persisted_before:
-                jrdd.unpersist()
         return {"conv_id": conv_id, "triples": triples, "entities": entities}
-
-    def _persistent_rdds(self):
-        jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return [(int(k), jmap[k]) for k in jmap.keySet().toArray()]
-
-    def _persistent_rdd_ids(self) -> set:
-        return {rdd_id for rdd_id, _ in self._persistent_rdds()}
 
 
 def _make_handler(service: KGService):
