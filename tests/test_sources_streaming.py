@@ -198,6 +198,50 @@ def test_stream_merge_edges_bridge(spark, tmp_path):
     assert second.agg({"support": "sum"}).collect()[0][0] == 20
 
 
+@pytest.mark.parametrize("bridge", ["to_graph", "merge_edges"])
+def test_stream_bridges_release_every_batch_pin(spark, tmp_path, bridge):
+    """A long-running stream must not accumulate cached frames: each
+    micro-batch releases what its pipeline run pinned once the batch's
+    output is written. Nine input files at eight files per trigger make
+    two batches."""
+    from waka_spark import synth
+    from waka_spark.plans.pipeline import KGPipeline
+    from waka_spark.streaming import ingest
+
+    kb = synth.build_kb(20)
+    in_dir = tmp_path / "turns_pins"
+    synth.synth_transcripts(
+        spark, kb, n_convs=6, hot_every=5, hot_turns=12, base_turns=5,
+    ).repartition(9).write.parquet(str(in_dir))
+    assert len(list(in_dir.glob("*.parquet"))) == 9
+    pipe = KGPipeline(
+        aliases=synth.aliases_df(spark, kb),
+        properties=synth.properties_df(spark),
+        gazetteer=synth.gazetteer(kb),
+        rules=synth.rules_df(spark, kb),
+        use_scorers=False,
+    )
+
+    spark.catalog.clearCache()
+    if bridge == "to_graph":
+        q = ingest.run_stream_to_graph(
+            spark, str(in_dir), pipe,
+            output_path=str(tmp_path / "graph"),
+            checkpoint_path=str(tmp_path / "ckpt_pins"),
+        )
+    else:
+        q = ingest.run_stream_merge_edges(
+            spark, str(in_dir), pipe,
+            edges_path=str(tmp_path / "edges_pins"),
+            checkpoint_path=str(tmp_path / "ckpt_pins"),
+        )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) >= 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_streaming_interval_join(spark, tmp_path):
     """Stream-stream interval join: clicks pair with purchases of the
     same user in the preceding hour; watermark bounds state."""

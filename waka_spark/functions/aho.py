@@ -1,7 +1,7 @@
 """Aho–Corasick multi-pattern string matcher (pure Python, no deps).
 
-Used by the deterministic gazetteer NER backend: one automaton per executor
-(built once inside the mapInPandas closure), one pass per document, emits
+Used by the deterministic corpus scan (operators/ner.py): one scanner per
+Python worker process (``ner._scanner``), one pass per document, emits
 *all* (overlapping) occurrences of every surface — matching the reference
 ensemble's behavior of producing overlapping mentions from independent
 backends (entity_recognition.py:332-349), which the conflict-resolution

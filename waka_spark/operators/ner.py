@@ -3,27 +3,39 @@
 The reference runs an ensemble of three transformer NER backends per document
 (entity_recognition.py:332-349) and unions their mentions with span-only set
 identity (kg.py:34-35). We reproduce the *dataflow*: N pluggable mention
-sources → ``union_mentions`` (priority-ordered span dedup). Backends:
+sources → ``union_mentions`` (priority-ordered span dedup).
 
-- ``gazetteer_ner`` — deterministic surface scan (Arrow-batched
-  ``mapInPandas``; one compiled alternation regex per executor, all
-  word-boundary occurrences). The CPU test/bench backend.
+Every deterministic scan of the corpus text is ONE Arrow kernel,
+:func:`deterministic_ner_and_rules`: a ``mapInPandas`` that finds each
+document's mention spans (:func:`_mention_spans`) and fired surface rules
+(:func:`_fired_rules`), with its scanners built once per Python worker
+process (:func:`_scanner`). The public scans are projections of it:
+
+- ``gazetteer_ner`` — all word-boundary occurrences of every gazetteer
+  surface. The CPU test/bench backend.
 - ``regex_literal_ner`` — numbers / percents / years → typed-literal
   mentions (the P7 literal-encoding path, entity_recognition.py:84-97).
+- ``deterministic_ner_fused`` — both, with ``union_mentions``' span
+  priority applied inside the kernel.
+- ``relations.aho_relation_extraction`` — the fired rules as raw triples.
+
+Other mention sources:
+
 - ``merge_token_runs`` — the relational equivalent of spaCy's contiguous
   PROPN/NOUN run merge (entity_recognition.py:101-171): lag-compare
   sessionization + run-prefix emission, pure DataFrame ops.
 - transformer backends (spaCy/Stanza/Flair analogs) share the same
-  ``mapInPandas`` shape with per-executor model caches; gated behind
+  ``mapInPandas`` shape with per-worker model caches; gated behind
   import guards since the models aren't in this environment.
 
-Scale notes: each backend is a narrow map over documents (no shuffle);
+Scale notes: each scan is a narrow map over documents (no shuffle);
 the union is a unionByName + one ``row_number`` per span — a single shuffle
 on (doc key, span), partition-pruned by the documents' conv_id partitioning.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from typing import Iterable, Iterator, Sequence
 
@@ -31,55 +43,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from waka_spark.config import DATE_TYPES, DECIMAL_TYPES
 from waka_spark.functions.aho import make_scanner, word_bounded
 from waka_spark.functions.literals import encode_literal
 
 MENTION_COLS = "conv_id string, start_idx int, end_idx int, text string, e_type string, url string"
-_EMPTY_MENTIONS = pd.DataFrame(
-    {k: [] for k in ("conv_id", "start_idx", "end_idx", "text", "e_type", "url")}
-)
-
-
-def gazetteer_ner(
-    documents: DataFrame, gazetteer: Sequence[tuple[str, str]]
-) -> DataFrame:
-    """All word-boundary occurrences of every gazetteer surface.
-
-    The gazetteer is closed over (driver-side list, shipped with the
-    serialized UDF) — it is a *dictionary*, small by construction; the
-    documents side streams through Arrow batches. One Aho–Corasick pass per
-    document finds all overlapping occurrences of every surface; the
-    automaton is built lazily once per executor process.
-    """
-    type_of = {s: t for s, t in gazetteer}
-    surfaces = list(type_of)
-    automaton_cell: list = []
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not automaton_cell:  # per-executor lazy build
-            automaton_cell.append(make_scanner(surfaces))
-        ac = automaton_cell[0]
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "start_idx", "end_idx", "text", "e_type", "url")}
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                if not text:
-                    continue
-                for start, end, surface in ac.finditer(text):
-                    if not word_bounded(text, start, end):
-                        continue
-                    e_type = type_of[surface]
-                    out["conv_id"].append(conv_id)
-                    out["start_idx"].append(start)
-                    out["end_idx"].append(end)
-                    out["text"].append(surface)
-                    out["e_type"].append(e_type)
-                    out["url"].append(encode_literal(surface, e_type))
-            yield pd.DataFrame(out) if out["conv_id"] else _EMPTY_MENTIONS
-
-    return documents.select("conv_id", "text").mapInPandas(scan, MENTION_COLS)
-
+_MENTION_NAMES = ["conv_id", "start_idx", "end_idx", "text", "e_type", "url"]
 
 SCAN_PRODUCT_COLS = (
     "conv_id string, kind string, start_idx int, end_idx int, text string, "
@@ -91,127 +59,171 @@ _SCAN_PRODUCT_NAMES = [
     "subj_text", "pred_text", "obj_text",
 ]
 
+# trailing guard blocks decimal/percent continuations ("3.14"→whole match
+# only, "27%%"→none) but not sentence punctuation ("staff 4019.")
+_NUMBER_RE = re.compile(r"(?<![\w.])[+-]?\d[\d,]*(?:\.\d+)?%?(?!\w|\.\d|%)")
+_YEAR_RE = re.compile(r"(?<!\w)(1[0-9]{3}|20[0-9]{2})(?!\w)")
+
+_SCANNERS: dict[str, object] = {}
+
+
+def _digest(patterns: Sequence[str]) -> str:
+    """Unambiguous scanner key. A joined-string key collides when a
+    surface itself contains the separator ({'a|b'} vs {'a','b'}) and would
+    hand one pattern set another set's scanner."""
+    return hashlib.md5(repr(list(patterns)).encode()).hexdigest()
+
+
+def _scanner(key: str, patterns: Sequence[str]):
+    """The scanner for ``patterns`` (``key`` = their driver-side
+    :func:`_digest`), built once per Python worker process and reused by
+    its later tasks and jobs.
+
+    The UDF reaches this function by module reference, so ``_SCANNERS``
+    is the worker's own module state. A cache or cell the UDF closed over
+    would be pickled into the command and rebuilt on every task.
+    """
+    scanner = _SCANNERS.get(key)
+    if scanner is None:
+        if len(_SCANNERS) >= 8:  # bound worker memory across jobs
+            _SCANNERS.clear()
+        scanner = _SCANNERS[key] = make_scanner(patterns)
+    return scanner
+
+
+def _mention_spans(
+    text: str, scanner, type_of: dict[str, str], literals: bool
+) -> dict[tuple[int, int], tuple[str, str]]:
+    """(start, end) → (surface, e_type) for one document: gazetteer hits
+    on word boundaries first, then years, then numbers into spans still
+    vacant — ``union_mentions(gazetteer, literals)`` priority."""
+    spans: dict[tuple[int, int], tuple[str, str]] = {}
+    for start, end, surface in scanner.finditer(text):
+        if word_bounded(text, start, end):
+            spans[(start, end)] = (surface, type_of[surface])
+    if literals:
+        for m in _YEAR_RE.finditer(text):
+            spans.setdefault((m.start(), m.end()), (m.group(0), "DATE"))
+        for m in _NUMBER_RE.finditer(text):
+            key = (m.start(), m.end())
+            if key not in spans:
+                e_type = "PERCENT" if m.group(0).endswith("%") else "CARDINAL"
+                spans[key] = (m.group(0), e_type)
+    return spans
+
+
+def _fired_rules(
+    text: str, scanner, rules: Sequence[tuple[str, str, str]]
+) -> list[tuple[str, str, str]]:
+    """The (subj, pred, obj) rules whose subject AND object surfaces both
+    occur in one document."""
+    present = scanner.present(text)
+    return [r for r in rules if r[0] in present and r[2] in present]
+
 
 def deterministic_ner_and_rules(
     documents: DataFrame,
     gazetteer: Sequence[tuple[str, str]],
     rule_list: Sequence[tuple[str, str, str]],
+    *,
+    _literals: bool = True,
 ) -> DataFrame:
-    """The corpus scan products of the deterministic pipeline — fused-NER
-    mentions (rows with ``kind='m'``) AND Aho rule-RE raw triples
-    (``kind='r'``) — in ONE Arrow pass over the document text.
+    """The deterministic corpus scan — mentions (rows with ``kind='m'``)
+    AND fired-rule raw triples (``kind='r'``) — in ONE Arrow pass over the
+    document text.
 
-    Document text is the bulk of the corpus bytes; the split mention/
-    extraction stages each shipped the full text to Python separately, so
-    a pipeline run paid two corpus→Arrow→Python passes for two scans of
-    the same strings. Here both automatons (gazetteer NER and rule-surface
-    presence) run per document inside one ``mapInPandas``, and the two
-    products come back in a shared schema the caller splits by ``kind``
-    (pin the combined frame — both splits are consumers). Per-kind rows
-    are bit-identical to :func:`deterministic_ner_fused` and
-    ``relations.aho_relation_extraction`` (pinned by
-    tests/test_round6_scan_fusion.py); transformer backends keep the
-    separate stages.
+    Document text is the bulk of the corpus bytes, so every deterministic
+    scan is this kernel and a projection of its rows
+    (:func:`mention_rows`, ``relations.raw_triple_rows``): a caller that
+    needs both products pins the scan and splits it by ``kind``, and the
+    text crosses the JVM→Python boundary once. Per document the gazetteer
+    scanner and the rule-surface scanner each make one pass (``_literals``
+    off drops the year/number spans, for ``gazetteer_ner`` and
+    ``relations.aho_relation_extraction``). The rule list
+    and gazetteer travel in the UDF's pickled command; transformer
+    backends keep separate stages.
     """
     type_of = {s: t for s, t in gazetteer}
     surfaces = list(type_of)
     rules = list(rule_list)
     rule_surfaces = sorted(
         {s for s, _, o in rules} | {o for _, _, o in rules})
-    cells: list = []
+    gaz_key, rule_key = _digest(surfaces), _digest(rule_surfaces)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not cells:
-            cells.append(make_scanner(surfaces))
-            cells.append(make_scanner(rule_surfaces))
-        gaz_ac, rule_ac = cells
+        gaz_scanner = _scanner(gaz_key, surfaces)
+        rule_scanner = _scanner(rule_key, rule_surfaces)
         for pdf in batches:
-            out = {k: [] for k in _SCAN_PRODUCT_NAMES}
-
-            def emit(conv_id, kind, start=None, end=None, text=None,
-                     e_type=None, url=None, subj=None, pred=None, obj=None):
-                out["conv_id"].append(conv_id)
-                out["kind"].append(kind)
-                out["start_idx"].append(start)
-                out["end_idx"].append(end)
-                out["text"].append(text)
-                out["e_type"].append(e_type)
-                out["url"].append(url)
-                out["subj_text"].append(subj)
-                out["pred_text"].append(pred)
-                out["obj_text"].append(obj)
-
+            rows = []
             for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
                 if not text:
                     continue
-                # --- mentions: identical logic to deterministic_ner_fused
-                spans: dict[tuple[int, int], tuple[str, str]] = {}
-                for start, end, surface in gaz_ac.finditer(text):
-                    if word_bounded(text, start, end):
-                        spans[(start, end)] = (surface, type_of[surface])
-                for m in _YEAR_RE.finditer(text):
-                    spans.setdefault(
-                        (m.start(), m.end()), (m.group(0), "DATE"))
-                for m in _NUMBER_RE.finditer(text):
-                    key = (m.start(), m.end())
-                    if key not in spans:
-                        e_type = ("PERCENT" if m.group(0).endswith("%")
-                                  else "CARDINAL")
-                        spans[key] = (m.group(0), e_type)
+                spans = _mention_spans(text, gaz_scanner, type_of, _literals)
                 for (s, e), (surface, e_type) in spans.items():
-                    emit(conv_id, "m", start=s, end=e, text=surface,
-                         e_type=e_type, url=encode_literal(surface, e_type))
-                # --- raw triples: identical logic to aho_relation_extraction
-                present = rule_ac.present(text)
-                for subj, pred, obj in rules:
-                    if subj in present and obj in present:
-                        emit(conv_id, "r", subj=subj, pred=pred, obj=obj)
-            yield pd.DataFrame(out, columns=_SCAN_PRODUCT_NAMES)
+                    rows.append((conv_id, "m", s, e, surface, e_type,
+                                 encode_literal(surface, e_type),
+                                 None, None, None))
+                for subj, pred, obj in _fired_rules(text, rule_scanner, rules):
+                    rows.append((conv_id, "r", None, None, None, None, None,
+                                 subj, pred, obj))
+            columns = dict(zip(_SCAN_PRODUCT_NAMES, map(list, zip(*rows))))
+            yield pd.DataFrame(columns, columns=_SCAN_PRODUCT_NAMES)
 
     return documents.select("conv_id", "text").mapInPandas(
         scan, SCAN_PRODUCT_COLS)
 
 
-# trailing guard blocks decimal/percent continuations ("3.14"→whole match
-# only, "27%%"→none) but not sentence punctuation ("staff 4019.")
-_NUMBER_RE = re.compile(r"(?<![\w.])[+-]?\d[\d,]*(?:\.\d+)?%?(?!\w|\.\d|%)")
-_YEAR_RE = re.compile(r"(?<!\w)(1[0-9]{3}|20[0-9]{2})(?!\w)")
+def mention_rows(scan: DataFrame) -> DataFrame:
+    """The mentions of a corpus scan: its ``kind='m'`` rows as
+    ``MENTION_COLS``."""
+    return scan.filter(F.col("kind") == "m").select(*_MENTION_NAMES)
+
+
+def gazetteer_ner(
+    documents: DataFrame, gazetteer: Sequence[tuple[str, str]]
+) -> DataFrame:
+    """All word-boundary occurrences of every gazetteer surface,
+    overlapping ones included: the corpus scan without literals or rules.
+
+    The gazetteer is a *dictionary*, small by construction, shipped with
+    the serialized UDF; the documents side streams through Arrow batches.
+    """
+    return mention_rows(
+        deterministic_ner_and_rules(documents, gazetteer, [], _literals=False))
 
 
 def regex_literal_ner(documents: DataFrame) -> DataFrame:
-    """Numeric/percent/year mentions with typed-literal URLs (P7).
+    """Numeric/percent/year mentions with typed-literal URLs (P7): the
+    corpus scan with an empty gazetteer.
 
     Labels follow the reference's NER label sets (entity_recognition.py:34-36):
     ``%``-suffixed → PERCENT, bare 4-digit years → DATE, other numbers →
     CARDINAL. The URL is minted here, so these mentions pass through entity
     linking as pre-linked literals with score 1.0 (entity_linking.py:83-93).
     """
+    return mention_rows(deterministic_ner_and_rules(documents, [], []))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "start_idx", "end_idx", "text", "e_type", "url")}
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                if not text:
-                    continue
-                spans: dict[tuple[int, int], tuple[str, str]] = {}
-                for m in _YEAR_RE.finditer(text):
-                    spans[(m.start(), m.end())] = (m.group(0), "DATE")
-                for m in _NUMBER_RE.finditer(text):
-                    key = (m.start(), m.end())
-                    if key not in spans:
-                        e_type = "PERCENT" if m.group(0).endswith("%") else "CARDINAL"
-                        spans[key] = (m.group(0), e_type)
-                for (s, e), (surface, e_type) in spans.items():
-                    out["conv_id"].append(conv_id)
-                    out["start_idx"].append(s)
-                    out["end_idx"].append(e)
-                    out["text"].append(surface)
-                    out["e_type"].append(e_type)
-                    out["url"].append(encode_literal(surface, e_type))
-            yield pd.DataFrame(out)
 
-    return documents.select("conv_id", "text").mapInPandas(scan, MENTION_COLS)
+def deterministic_ner_fused(
+    documents: DataFrame, gazetteer: Sequence[tuple[str, str]]
+) -> DataFrame:
+    """``union_mentions(gazetteer_ner(d, g), regex_literal_ner(d))`` in ONE
+    Arrow pass — bit-identical output, pinned by tests/test_ner_linking.py.
+
+    Why it exists: document text is the bulk of the bytes, and the
+    two-backend composition ships it to Python *twice* and then pays a
+    full-corpus ``row_number`` shuffle just to dedup exact-span collisions.
+    Both backends emit unique spans per document (the scanner yields each
+    (start, end) once; the literal spans dedup in a dict), so the
+    priority-ordered union is equivalent to an in-UDF dict insert —
+    gazetteer first, literals only into vacant spans — and needs no
+    shuffle at all. At 10^12 turns this removes one full pass of the
+    corpus through Arrow plus one all-mentions exchange.
+
+    The generic ``union_mentions`` stays for heterogeneous ensembles
+    (transformer backends can emit overlapping duplicates across workers).
+    """
+    return mention_rows(deterministic_ner_and_rules(documents, gazetteer, []))
 
 
 def union_mentions(*backends: DataFrame) -> DataFrame:
@@ -286,61 +298,3 @@ def merge_token_runs(
         )
     )
     return singles.unionByName(prefixes)
-
-
-def deterministic_ner_fused(
-    documents: DataFrame, gazetteer: Sequence[tuple[str, str]]
-) -> DataFrame:
-    """``union_mentions(gazetteer_ner(d, g), regex_literal_ner(d))`` in ONE
-    Arrow pass — bit-identical output, pinned by tests/test_ner_linking.py.
-
-    Why it exists: document text is the bulk of the bytes, and the
-    two-backend composition ships it to Python *twice* and then pays a
-    full-corpus ``row_number`` shuffle just to dedup exact-span collisions.
-    Both backends emit unique spans per document (the automaton yields each
-    (start, end) once; the regex scanner dedups in a dict), so the
-    priority-ordered union is equivalent to an in-UDF dict insert —
-    gazetteer first, literals only into vacant spans — and needs no
-    shuffle at all. At 10^12 turns this removes one full pass of the
-    corpus through Arrow plus one all-mentions exchange.
-
-    The generic ``union_mentions`` stays for heterogeneous ensembles
-    (transformer backends can emit overlapping duplicates across workers).
-    """
-    type_of = {s: t for s, t in gazetteer}
-    surfaces = list(type_of)
-    automaton_cell: list = []
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not automaton_cell:
-            automaton_cell.append(make_scanner(surfaces))
-        ac = automaton_cell[0]
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "start_idx", "end_idx", "text", "e_type", "url")}
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                if not text:
-                    continue
-                spans: dict[tuple[int, int], tuple[str, str]] = {}
-                for start, end, surface in ac.finditer(text):
-                    if word_bounded(text, start, end):
-                        spans[(start, end)] = (surface, type_of[surface])
-                for m in _YEAR_RE.finditer(text):
-                    spans.setdefault(
-                        (m.start(), m.end()), (m.group(0), "DATE"))
-                for m in _NUMBER_RE.finditer(text):
-                    key = (m.start(), m.end())
-                    if key not in spans:
-                        e_type = ("PERCENT" if m.group(0).endswith("%")
-                                  else "CARDINAL")
-                        spans[key] = (m.group(0), e_type)
-                for (s, e), (surface, e_type) in spans.items():
-                    out["conv_id"].append(conv_id)
-                    out["start_idx"].append(s)
-                    out["end_idx"].append(e)
-                    out["text"].append(surface)
-                    out["e_type"].append(e_type)
-                    out["url"].append(encode_literal(surface, e_type))
-            yield pd.DataFrame(out) if out["conv_id"] else _EMPTY_MENTIONS
-
-    return documents.select("conv_id", "text").mapInPandas(scan, MENTION_COLS)

@@ -15,6 +15,9 @@ Backends here:
   rules table (subj_surface, pred_text, obj_surface) fires when both
   surfaces occur in the document. Pure DataFrame ops (containment theta-join
   against a broadcast side), no UDF — the test/bench backend.
+- ``aho_relation_extraction`` — the same rules as the raw-triple rows of
+  the deterministic corpus scan (``ner.deterministic_ner_and_rules``):
+  one scanner pass per document whatever the rule count.
 - ``decode_mrebel_tags`` / ``decode_rebel_tags`` — the tag grammars as pure
   Python functions (golden-tested), used by the transformer backend's
   mapInPandas and reusable for replaying stored model generations.
@@ -28,12 +31,13 @@ relation_extraction.py:143-148.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from waka_spark.operators.ner import deterministic_ner_and_rules
 
 RAW_TRIPLE_COLS = (
     "conv_id string, subj_text string, subj_type string, "
@@ -68,64 +72,48 @@ def rule_relation_extraction(documents: DataFrame, rules: DataFrame) -> DataFram
     )
 
 
-_AHO_CACHE: dict[str, object] = {}
+def collect_rules(rules: DataFrame) -> list[tuple[str, str, str]]:
+    """The rules table on the driver, as (subj_surface, pred_text,
+    obj_surface) tuples — the one collect of it.
+
+    Bound: the rules are a dictionary, like the reference's in-process
+    rule set, never a corpus-derived table. The list travels inside the
+    corpus scan UDF's pickled command to every task, so its size is paid
+    per task as well as on the driver.
+    """
+    return [
+        (r["subj_surface"], r["pred_text"], r["obj_surface"])
+        for r in rules.collect()
+    ]
+
+
+def raw_triple_rows(scan: DataFrame) -> DataFrame:
+    """The raw triples of a corpus scan (``ner.deterministic_ner_and_rules``):
+    its ``kind='r'`` rows as ``RAW_TRIPLE_COLS``, one per (conv_id, subj,
+    pred, obj) — the per-document dedup of relation_extraction.py:143-148."""
+    return scan.filter(F.col("kind") == "r").select(
+        "conv_id",
+        "subj_text",
+        F.lit(None).cast("string").alias("subj_type"),
+        "pred_text",
+        "obj_text",
+        F.lit(None).cast("string").alias("obj_type"),
+    ).dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
 
 
 def aho_relation_extraction(documents: DataFrame, rules: DataFrame) -> DataFrame:
     """``rule_relation_extraction`` semantics at scan cost independent of
-    the rule count: one Aho–Corasick pass per document finds every rule
-    surface present (functions/aho.py — the same automaton the gazetteer
-    NER uses), then rules whose subject AND object surfaces both occur
-    fire. Identical output to the double-``contains`` theta join (pinned by
+    the rule count: the raw-triple rows of the corpus scan with an empty
+    gazetteer. Per document one scanner pass finds every rule surface
+    present (functions/aho.py — the same scanner the gazetteer NER uses),
+    then rules whose subject AND object surfaces both occur fire.
+    Identical output to the double-``contains`` theta join (pinned by
     test), but the per-document work is O(len(text) + matches) instead of
     O(len(text) * n_rules) string scans — the right shape when the rule
     table grows past a few dozen entries.
-
-    The rules table is collected at plan build (it is a broadcast-sized
-    dictionary, like the reference's in-process rule set); the automaton
-    builds once per executor worker via a module-level cache.
     """
-    rule_list = [
-        (r["subj_surface"], r["pred_text"], r["obj_surface"])
-        for r in rules.collect()
-    ]
-    surfaces = sorted({s for s, _, o in rule_list} | {o for _, _, o in rule_list})
-    # unambiguous key: a joined-string key collides when a surface itself
-    # contains the separator ({'a|b'} vs {'a','b'}) and would hand this
-    # rule table another table's automaton
-    cache_key = hashlib.md5(repr(surfaces).encode()).hexdigest()
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from waka_spark.functions.aho import make_scanner
-
-        if cache_key not in _AHO_CACHE:  # once per executor worker
-            if len(_AHO_CACHE) >= 8:  # bound worker memory across jobs
-                _AHO_CACHE.clear()
-            _AHO_CACHE[cache_key] = make_scanner(surfaces)
-        auto = _AHO_CACHE[cache_key]
-
-        for pdf in batches:
-            rows = []
-            for conv_id, text in zip(pdf["conv_id"], pdf["text"]):
-                present = auto.present(text or "")
-                for subj, pred, obj in rule_list:
-                    if subj in present and obj in present:
-                        rows.append({
-                            "conv_id": conv_id,
-                            "subj_text": subj, "subj_type": None,
-                            "pred_text": pred,
-                            "obj_text": obj, "obj_type": None,
-                        })
-            yield pd.DataFrame(
-                rows,
-                columns=["conv_id", "subj_text", "subj_type",
-                         "pred_text", "obj_text", "obj_type"],
-            )
-
-    return (
-        documents.select("conv_id", "text").mapInPandas(extract, RAW_TRIPLE_COLS)
-        .dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
-    )
+    return raw_triple_rows(deterministic_ner_and_rules(
+        documents, [], collect_rules(rules), _literals=False))
 
 
 # --------------------------------------------------------------- decoders

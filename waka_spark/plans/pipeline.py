@@ -30,16 +30,25 @@ from waka_spark.operators.assembly import assemble_documents
 from waka_spark.operators.clustering import cluster_entities
 from waka_spark.operators.fusion import fuse_triples
 from waka_spark.operators.linking import link_entities
-from waka_spark.operators.ner import deterministic_ner_fused
+from waka_spark.operators.ner import (
+    deterministic_ner_and_rules,
+    deterministic_ner_fused,
+    mention_rows,
+)
 from waka_spark.operators.rel_linking import link_predicates
-from waka_spark.operators.relations import aho_relation_extraction
+from waka_spark.operators.relations import (
+    aho_relation_extraction,
+    collect_rules,
+    raw_triple_rows,
+)
 from waka_spark.operators.rerank import rerank_candidates, split_sentences
+from waka_spark.plans.pins import pin
 
 
 @dataclass
 class KGPipeline:
     """Deterministic-backend pipeline. The transformer backends swap in by
-    replacing ``ner_backends`` / ``extract`` with their mapInPandas
+    overriding ``mentions`` / ``raw_triples`` with their mapInPandas
     counterparts — the dataflow downstream is identical."""
 
     aliases: DataFrame
@@ -112,26 +121,9 @@ class KGPipeline:
         if not uses_default_scans:
             return self.mentions(documents), self.raw_triples(documents)
 
-        from waka_spark.operators.ner import deterministic_ner_and_rules
-        from waka_spark.plans.pins import pin
-
-        rule_list = [
-            (r["subj_surface"], r["pred_text"], r["obj_surface"])
-            for r in self.rules.collect()
-        ]
-        combined = pin(deterministic_ner_and_rules(
-            documents, self.gazetteer, rule_list))
-        mentions = combined.filter(F.col("kind") == "m").select(
-            "conv_id", "start_idx", "end_idx", "text", "e_type", "url")
-        raw = combined.filter(F.col("kind") == "r").select(
-            "conv_id",
-            "subj_text",
-            F.lit(None).cast("string").alias("subj_type"),
-            "pred_text",
-            "obj_text",
-            F.lit(None).cast("string").alias("obj_type"),
-        ).dropDuplicates(["conv_id", "subj_text", "pred_text", "obj_text"])
-        return mentions, raw
+        scan = pin(deterministic_ner_and_rules(
+            documents, self.gazetteer, collect_rules(self.rules)))
+        return mention_rows(scan), raw_triple_rows(scan)
 
     def linked_triples(self, raw_triples: DataFrame) -> DataFrame:
         return link_predicates(

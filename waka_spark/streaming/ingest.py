@@ -280,6 +280,7 @@ def run_stream_merge_edges(
     skip.
     """
     from waka_spark.plans.incremental import edges_from_triples, merge_edges
+    from waka_spark.plans.pins import pin_scope
     from waka_spark.plans.versioned import VersionedTable
 
     table = VersionedTable(edges_path)
@@ -291,15 +292,16 @@ def run_stream_merge_edges(
             if (m.get("batch_id") == batch_id
                     and m.get("checkpoint") == checkpoint_path):
                 return  # at-least-once replay of an already-committed batch
-        out = pipeline.run(batch_df, resolve=True)
-        delta = edges_from_triples(out["triples"])
-        merged = (
-            delta if cur is None
-            else merge_edges(table.read(spark, cur), delta)
-        )
-        table.commit(
-            merged,
-            meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
+        with pin_scope():  # the batch's pins die with its commit
+            out = pipeline.run(batch_df, resolve=True)
+            delta = edges_from_triples(out["triples"])
+            merged = (
+                delta if cur is None
+                else merge_edges(table.read(spark, cur), delta)
+            )
+            table.commit(
+                merged,
+                meta={"batch_id": batch_id, "checkpoint": checkpoint_path})
 
     stream = stream_transcripts(spark, input_path)
     writer = (
@@ -321,15 +323,18 @@ def run_stream_to_graph(
 ):
     """foreachBatch bridge: each micro-batch of turns runs through the batch
     KG pipeline and appends to the edges table — batch/stream operator
-    parity by construction."""
+    parity by construction. The frames a batch pins are released once its
+    edges are written, so a long-running stream holds none of them."""
+    from waka_spark.plans.pins import pin_scope
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.run(batch_df, resolve=True)
-        (
-            out["triples"]
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(f"{output_path}/edges")
-        )
+        with pin_scope():
+            out = pipeline.run(batch_df, resolve=True)
+            (
+                out["triples"]
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append").parquet(f"{output_path}/edges")
+            )
 
     stream = stream_transcripts(spark, input_path)
     writer = (
